@@ -583,8 +583,18 @@ def bench_asof_giant_key(spark, sf_dir: str, entries: dict, checks: dict) -> Non
         c_.withColumnRenamed("ts", "cts"),
         (p_["user_id"] == c_["user_id"]) & (F.col("cts") <= p_["ts"]),
     ).groupBy("event_id").agg(F.max("cts").alias("asof_ts"))
-    checks["asof_result_identical"] = (
-        a.exceptAll(n).count() == 0 and n.exceptAll(a.filter(F.col("asof_ts").isNotNull())).count() == 0
+    checks["asof_result_identical"] = asof_result_identical(a, n)
+
+
+def asof_result_identical(asof: DataFrame, naive: DataFrame) -> bool:
+    """(event_id, asof_ts) of the fill-down as-of join equal the range
+    join's MAX(cts) per purchase, as multisets. A purchase with no
+    earlier click has a NULL ``asof_ts`` in ``asof`` and no row in the
+    inner range join, so those rows are left out of BOTH directions."""
+    matched = asof.filter(F.col("asof_ts").isNotNull())
+    return (
+        matched.exceptAll(naive).count() == 0
+        and naive.exceptAll(matched).count() == 0
     )
 
 

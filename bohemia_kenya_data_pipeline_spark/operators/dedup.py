@@ -879,7 +879,7 @@ def _minhash_tombstones(spark, index_path: str) -> DataFrame | None:
     path = _minhash_tombstone_path(index_path)
     if not _hadoop_exists(spark, path):
         return None
-    return spark.read.parquet(path).select("id").distinct()
+    return parquet_scan(spark, path).select("id").distinct()
 
 
 def minhash_index_compact(spark, index_path: str) -> None:
@@ -894,9 +894,7 @@ def minhash_index_compact(spark, index_path: str) -> None:
     tomb = _minhash_tombstones(spark, index_path)
     if tomb is None:
         return
-    rows = parquet_scan(spark, index_path, [("band", "int")]).join(
-        F.broadcast(tomb), "id", "anti"
-    )
+    rows = parquet_scan(spark, index_path).join(F.broadcast(tomb), "id", "anti")
     # partitionBy-preserving staged swap: write to a stage sibling,
     # then replace (Spark cannot overwrite a path it is reading)
     stage = index_path.rstrip("/") + "__stage"
@@ -930,9 +928,7 @@ def minhash_index_stats(spark, index_path: str) -> DataFrame:
     (id, band, bucket) rows — text is never stored, so this is always
     index-metadata-sized I/O — two map-side-combined groupBys, and the
     result is B rows (B = bands)."""
-    rows = parquet_scan(spark, index_path, [("band", "int")]).select(
-        "id", "band", "bucket"
-    )
+    rows = parquet_scan(spark, index_path).select("id", "band", "bucket")
     tomb = _minhash_tombstones(spark, index_path)
     live = rows if tomb is None else rows.join(F.broadcast(tomb), "id", "anti")
     stored = rows.groupBy("band").agg(F.count(F.lit(1)).alias("stored_rows"))
@@ -994,7 +990,7 @@ def maintain_minhash_index(
         "hot_buckets": 0,
     }
     if new_docs is not None:
-        live_ids = parquet_scan(spark, index_path, [("band", "int")]).select(
+        live_ids = parquet_scan(spark, index_path).select(
             F.col("id").alias(id_col)
         )
         tomb = _minhash_tombstones(spark, index_path)
@@ -1063,7 +1059,7 @@ def minhash_index_query(
         params["shingle_n"],
         params["seed"],
     ).select(F.col("id").alias("new_id"), "band", "bucket")
-    index = parquet_scan(spark, index_path, [("band", "int")]).select(
+    index = parquet_scan(spark, index_path).select(
         F.col("id").alias("index_id"), "band", "bucket"
     )
     tomb = _minhash_tombstones(spark, index_path)

@@ -35,7 +35,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import local_df
+from ..session import local_df, parquet_scan
 
 
 class ConcurrentMaintenanceError(RuntimeError):
@@ -731,7 +731,7 @@ def _zorder_fold(
     victim_bytes = sum(sizes.get(n, 0) for n in victims)
     n_tiles = max(1, math.ceil(victim_bytes / params["target_file_bytes"]))
     stage_dir = path.rstrip("/") + "__zstage"
-    ddf = spark.read.parquet(*[path.rstrip("/") + "/" + n for n in victims])
+    ddf = parquet_scan(spark, path, [path.rstrip("/") + "/" + n for n in victims])
     keyed = ddf.withColumn(
         "__z", zorder_value(params["col_a"], params["col_b"], params["bits"])
     )
@@ -835,7 +835,7 @@ def _zorder_extend(spark: SparkSession, path: str) -> dict:
         return report
 
     delta_paths = [path.rstrip("/") + "/" + name for name in delta]
-    ddf = spark.read.parquet(*delta_paths)
+    ddf = parquet_scan(spark, path, delta_paths)
     delta_bytes = sum(current[name] for name in delta)
     n_tiles = max(1, math.ceil(delta_bytes / params["target_file_bytes"]))
     stage_dir = path.rstrip("/") + "__zstage"

@@ -37,7 +37,7 @@ import re as _re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import local_df
+from ..session import local_df, parquet_scan
 from .bloom import DEFAULT_N_HASHES, _positions
 
 MANIFEST_SUFFIX = "__manifest"
@@ -442,7 +442,7 @@ def build_file_manifest(
     """
     if not stats_cols and bloom_col is None:
         raise ValueError("need at least one stats column or a bloom_col")
-    df = spark.read.parquet(path).withColumn(
+    df = parquet_scan(spark, path).withColumn(
         "_file", _canon_col(F.input_file_name())
     )
     listing = _list_data_files(spark, path)
@@ -484,11 +484,11 @@ _BLOOM_SCHEMA = "_file STRING, word_idx BIGINT, word BIGINT"
 
 def _read_stats(spark: SparkSession, path: str, params: dict) -> DataFrame:
     """Stats dataset read with the schema recorded at build time —
-    no footer-inference job. Manifests written before the schema was
-    recorded degrade to inference."""
+    no footer-inference job, on remote paths too. Manifests written
+    before the schema was recorded take it from a footer."""
     sj = params.get("stats_schema")
     if sj is None:
-        return spark.read.parquet(_stats_path(path))
+        return parquet_scan(spark, _stats_path(path))
     from pyspark.sql.types import StructType
 
     return spark.read.schema(
@@ -700,9 +700,9 @@ def extend_file_manifest(spark: SparkSession, path: str, _diff=None) -> dict:
     if fresh:
         # basePath reconstructs hive partition columns from the leaf
         # paths, same contract as read_with_skipping's pruned scan
-        new_df = spark.read.option("basePath", path).parquet(
-            *[n for n, _, _ in fresh]
-        ).withColumn("_file", _canon_col(F.input_file_name()))
+        new_df = parquet_scan(spark, path, [n for n, _, _ in fresh]).withColumn(
+            "_file", _canon_col(F.input_file_name())
+        )
     if not n_drop:
         # append-only repair (the steady-state ingest tick): the kept
         # rows are untouched on disk, so APPEND the delta-sized stats
@@ -907,13 +907,14 @@ def read_with_skipping(
         raise ValueError("need predicates and/or in_keys to skip by")
     if not files:
         # schema-stable empty result without opening any data file
-        out = spark.read.parquet(path).filter(F.lit(False))
+        out = parquet_scan(spark, path).filter(F.lit(False))
     else:
-        # basePath reconstructs hive partition columns from the kept
-        # leaf paths — without it a partitioned layout would silently
-        # lose its partition columns and the result would no longer
-        # equal read.parquet(path).filter(...) (ADVICE r8)
-        out = spark.read.option("basePath", path).parquet(*sorted(files))
+        # parquet_scan sets basePath, which reconstructs hive partition
+        # columns from the kept leaf paths — without it a partitioned
+        # layout would silently lose its partition columns and the
+        # result would no longer equal read.parquet(path).filter(...)
+        # (ADVICE r8)
+        out = parquet_scan(spark, path, sorted(files))
     if predicates:
         out = out.filter(_row_pred(predicates))
     if in_keys is not None:

@@ -161,13 +161,17 @@ def sessionize(
     deterministic when a user has duplicate timestamps.
     (Scale-pack operator: not in the reference, standard for event
     logs / training-data pipelines.)
+
+    The gap is compared in microseconds (``unix_micros``), the
+    timestamp's own precision — the streaming sessionizer's unit.
+    Whole seconds (``cast("long")`` truncates each side) would join two
+    events 1800.3 s apart at .6 and .9 past the second into one
+    30-minute session.
     """
     w = Window.partitionBy(user_col).orderBy(ts_col, *order_tiebreakers)
     prev = F.lag(F.col(ts_col)).over(w)
-    is_new = (
-        prev.isNull()
-        | ((F.col(ts_col).cast("long") - prev.cast("long")) > gap_minutes * 60)
-    ).cast("int")
+    gap_us = F.unix_micros(F.col(ts_col)) - F.unix_micros(prev)
+    is_new = (prev.isNull() | (gap_us > gap_minutes * 60 * 1_000_000)).cast("int")
     return df.withColumn("__new", is_new).withColumn(
         session_col, F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, 0))
     ).drop("__new")

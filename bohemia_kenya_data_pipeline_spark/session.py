@@ -8,11 +8,18 @@ job/test shares the same execution profile:
 - Arrow on (the few Pandas-UDF operators move data in columnar batches)
 - shuffle partitions sized for the local harness; on a real cluster AQE
   coalesces from a deliberately high initial number.
+- Python call-site capture off (``get_spark`` says why and what error
+  messages lose).
+
+This module is also the engine's py4j boundary for metadata:
+:func:`parquet_scan` reads engine-written parquet with the schema taken
+from a local footer instead of a Spark inference job.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -60,61 +67,90 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
-def parquet_scan(spark: SparkSession, path: str, partition_cols=()) -> DataFrame:
-    """Read an ENGINE-WRITTEN parquet dataset with its schema taken
-    from one local footer instead of a Spark inference pass.
+def parquet_scan(
+    spark: SparkSession, path: str, files: Sequence[str] | None = None
+) -> DataFrame:
+    """Read an ENGINE-WRITTEN parquet dataset (or the explicit
+    ``files`` under its root ``path``) without Spark's footer-inference
+    job.
 
-    Schema-less ``spark.read.parquet`` runs a footer-inference job
-    (listing + footer fetch + merge) at plan time — ~0.1-0.25 s per
-    call (r14; the §6 metadata class the table-schema memo already
-    retired for the STATIC tables). Index/sidecar datasets are fresh
-    per build, so a memo never hits; instead the schema comes from one
-    ``pyarrow.parquet.read_schema`` of any data file (~1 ms, matching
-    the default first-footer semantics — the engine never writes
-    mixed-schema datasets). ``partition_cols`` appends the
-    directory-partition columns as ``(name, ddl_type)`` pairs, exactly
-    as the engine wrote them (e.g. ``[("cid", "int")]``).
+    Schema-less ``spark.read.parquet`` runs one Spark job at plan time
+    to fetch and convert a footer (~40 ms-0.25 s per call; r14). The
+    engine's lifecycle ticks read their own freshly written tables,
+    index partitions and sidecars on every tick, so that job is pure
+    bookkeeping. Here the schema comes from one local
+    ``pyarrow.parquet.read_schema`` (~1 ms) of the same footer Spark
+    would pick — the first data file in path order, which is what
+    inference reads with ``mergeSchema`` off — and is the Spark schema
+    Spark itself stored in that footer
+    (``org.apache.spark.sql.parquet.row.metadata``), so column types
+    and order are exactly those of the schema-less read. Hive
+    partition columns are NOT in that schema; Spark's path-based
+    partition discovery (driver-side, no job) appends them with the
+    same inferred types as before.
 
-    Falls back to plain inference for remote schemes, empty dirs, or
-    any pyarrow hiccup. Not for timestamp-bearing EXTERNAL data —
-    arrow→Spark timestamp mapping is reader-config-dependent; engine
-    indexes store only ints/doubles/strings/arrays."""
-    st = _local_footer_schema(path, partition_cols, spark)
-    if st is None:
-        return spark.read.parquet(path)
-    return spark.read.schema(st).parquet(path)
+    ``files`` reads only those data files, with ``basePath=path`` so a
+    partitioned layout keeps its partition columns (the pruned-read and
+    delta-read shape); the schema then comes from the first of
+    ``files``, again as inference would.
+
+    Falls back to plain inference for remote schemes, empty datasets,
+    footers without the Spark schema (files Spark did not write), or
+    any pyarrow error."""
+    st = _local_footer_schema(spark, path, files)
+    reader = spark.read if st is None else spark.read.schema(st)
+    if files is None:
+        return reader.parquet(path)
+    return reader.option("basePath", path).parquet(*files)
 
 
-def _local_footer_schema(path: str, partition_cols=(), spark=None):
+#: footer key under which Spark's parquet writer stores the row schema
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _is_data_file(rel: str) -> bool:
+    """Spark's listing rule: a path component starting with ``_`` or
+    ``.`` (``_SUCCESS``, ``_temporary/``, ``.crc``) is hidden, unless it
+    is a ``k=v`` partition directory."""
+    parts = rel.split(os.sep)
+    return parts[-1].endswith(".parquet") and not any(
+        p.startswith(("_", ".")) and "=" not in p for p in parts
+    )
+
+
+def _local_footer_schema(spark: SparkSession, path: str, files=None):
+    """Spark's stored data schema of a LOCAL engine-written dataset, or
+    ``None`` when it cannot be read cheaply and exactly."""
     from .operators.skipping import _local_root, _walk_local_files
 
     local = _local_root(path, spark)
     if local is None:
         return None
     try:
-        data = next(
-            (
-                f
-                for f, _, _ in _walk_local_files(local)
-                if f.endswith(".parquet")
-                and not os.path.basename(f).startswith(("_", "."))
-            ),
-            None,
-        )
+        if files is None:
+            data = min(
+                (
+                    f
+                    for f, _, _ in _walk_local_files(local)
+                    if _is_data_file(os.path.relpath(f, local))
+                ),
+                default=None,
+            )
+        else:
+            data = _local_root(min(files), spark)
         if data is None:
             return None
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
+        import json
 
-        st = from_arrow_schema(pq.read_schema(data))
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
+
+        meta = pq.read_schema(data).metadata or {}
+        if _SPARK_ROW_METADATA not in meta:
+            return None
+        return StructType.fromJson(json.loads(meta[_SPARK_ROW_METADATA]))
     except Exception:
         return None
-    from pyspark.sql.types import _parse_datatype_string
-
-    for name, ddl in partition_cols:
-        if name not in st.fieldNames():
-            st = st.add(name, _parse_datatype_string(ddl))
-    return st
 
 
 def get_spark(
@@ -127,6 +163,19 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (fallback
     ``local[*]``) so the driver harness, tests and bench all agree.
+
+    DataFrame call-site capture is OFF
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+    PySpark wraps every DataFrame/Column API call
+    (``pyspark.errors.utils._with_origin``) in an active-session lookup,
+    a JVM reflection lookup, a conf read, a set and a clear of the JVM
+    origin, a Python stack walk and a failed ``import IPython`` — about
+    8 extra py4j round trips per call (``F.col("a") + F.lit(1)``, three
+    wrapped calls: 31 py4j calls with capture, 7 without). The engine
+    builds plans Column by Column and runs lifecycle ticks made of many
+    small plans, so that tax lands on every tick. What errors lose: the
+    Python ``file:line`` of the DataFrame call in a runtime error's
+    query context; the error class and message are unchanged.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -154,6 +203,8 @@ def get_spark(
         # runtime via local shuffle reader when beneficial.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # --- py4j: no per-call Python call-site capture (see docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

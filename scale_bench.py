@@ -448,6 +448,18 @@ def build_replica(spark, factor: int) -> str:
     return dst
 
 
+def _rm_index(p: str) -> None:
+    """Remove a table/index directory and its ``__<tag>`` siblings:
+    manifest/tombstone/stats directories and the JSON centroid and
+    codebook sidecar files."""
+    shutil.rmtree(p, ignore_errors=True)
+    for side in ("__manifest", "__tombstones", "__stats"):
+        shutil.rmtree(p + side, ignore_errors=True)
+    for side in ("__centroids.json", "__codebooks.json"):
+        if os.path.isfile(p + side):
+            os.remove(p + side)
+
+
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -777,8 +789,7 @@ def main() -> None:
             "corpus is never re-read"
         )
         for p in rpaths.values():
-            shutil.rmtree(p, ignore_errors=True)
-            shutil.rmtree(p + "__centroids", ignore_errors=True)
+            _rm_index(p)
 
     # r11 (VERDICT r10 ask 5): the IDLE maintenance tick — the number a
     # scheduler actually budgets, because the tick runs before every
@@ -812,10 +823,7 @@ def main() -> None:
                 "minhash": os.path.join(SCRATCH, f"idlemh_x{fct}"),
             }
             for p in ps.values():
-                shutil.rmtree(p, ignore_errors=True)
-                for side in ("__manifest", "__centroids", "__codebooks",
-                             "__tombstones", "__stats"):
-                    shutil.rmtree(p + side, ignore_errors=True)
+                _rm_index(p)
             li = spark.read.parquet(
                 os.path.join(dirs[fct], "lineitem.parquet")
             )
@@ -895,10 +903,7 @@ def main() -> None:
             results[name]["note"] = idle_notes[name]
         for ps in ipaths.values():
             for p in ps.values():
-                shutil.rmtree(p, ignore_errors=True)
-                for side in ("__manifest", "__centroids", "__codebooks",
-                             "__tombstones", "__stats"):
-                    shutil.rmtree(p + side, ignore_errors=True)
+                _rm_index(p)
 
     # Deep pass (VERDICT r5 ask 5): the entries whose 10x slope was
     # >= 0.8 get a 30x point to confirm the slope holds and no memory

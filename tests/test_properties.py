@@ -106,6 +106,20 @@ def test_sessionize_order_and_partition_invariant(spark, gaps, seed):
     assert n_sessions == expected
 
 
+def test_sessionize_splits_sub_second_gap_over_threshold(spark):
+    """A gap of 1800.3 s is over the 30-minute threshold even though the
+    whole-second parts (.6 -> .9 past the second) differ by exactly
+    1800: the split must be decided at microsecond precision, as the
+    DuckDB oracle and the streaming sessionizer do."""
+    t0 = 1_600_000_000.6
+    rows = [("u", 1, t0), ("u", 2, t0 + 1800.3), ("u", 3, t0 + 1800.3 + 1799.9)]
+    df = spark.createDataFrame(rows, "user_id string, event_id int, sec double")
+    df = df.withColumn("ts", F.timestamp_micros(F.round(F.col("sec") * 1e6).cast("long")))
+    out = W.sessionize(df, "user_id", "ts", gap_minutes=30, order_tiebreakers=["event_id"])
+    got = {r.event_id: r.session_id for r in out.collect()}
+    assert got == {1: 1, 2: 2, 3: 2}
+
+
 @given(
     thresholds=st.lists(st.integers(0, 100), min_size=40, max_size=40),
     xs=st.lists(st.integers(0, 100), min_size=1, max_size=30),

@@ -1,10 +1,14 @@
 """Persistent ANN index (jobs.retrieval): exact parity with ivf_topk,
 file-level partition pruning on the probed centroids, sidecar
-round-trip."""
+round-trip, and a metadata plane (JSON sidecars, footer-schema scans)
+that runs no Spark job."""
 
 from __future__ import annotations
 
 import glob
+import os
+import struct
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -745,3 +749,116 @@ def test_maintain_pq_index_policy_ticks(spark, tmp_path):
         spark, path, corpus.filter(F.col("vec_id") == 3), k=3, n_probe=4
     )
     assert out.count() == 3
+
+
+# ---------------------------------------------------------------------------
+# Metadata plane: sidecars and schema reads run no Spark job
+# ---------------------------------------------------------------------------
+
+
+def _spark_jobs(spark, fn):
+    """``(fn(), number of Spark jobs it ran)``, counted through the
+    status tracker in a job group of its own."""
+    sc = spark.sparkContext
+    group = f"metadata-plane-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _bits(xs):
+    return [struct.pack("<d", x) for x in xs]
+
+
+#: doubles a text round trip gets wrong when it is not shortest-repr
+#: exact: a non-representable sum, a signed zero, a subnormal
+_TRICKY = [0.1 + 0.2, -0.0, 5e-324]
+
+
+def _tricky_state():
+    cents = [_TRICKY + [1.0] + [0.0] * 4, [0.0] * 3 + [1.0] + [0.0] * 4,
+             [0.0] * 7 + [1.0], [0.5] * 8]
+    cb = [[list(cw) for cw in book] for book in _toy_codebooks()]
+    cb[0][0] = _TRICKY[:2]
+    cb[1][3] = [_TRICKY[2], -0.0]
+    return cents, cb
+
+
+def test_ivfpq_sidecars_round_trip_bit_exactly(spark, tmp_path):
+    cents, cb = _tricky_state()
+    path = str(tmp_path / "pq_bits")
+    rt.build_ivfpq_index(_toy_corpus(spark), path, centroids=cents, codebooks=cb)
+    got_c = rt.load_ann_centroids(spark, path)
+    got_cb = rt.load_pq_codebooks(spark, path)
+    assert [_bits(c) for c in got_c] == [_bits(c) for c in cents]
+    assert [[_bits(cw) for cw in book] for book in got_cb] == [
+        [_bits(cw) for cw in book] for book in cb
+    ]
+
+
+def test_ivfpq_metadata_plane_runs_no_spark_job(spark, tmp_path):
+    """Sidecar loads add no job at all, and the lifecycle calls run only
+    their data jobs: build and extend = the partitioned index write,
+    query = the probed-cid collect — also with a tombstone sidecar,
+    whose schema comes from its footer, not an inference job."""
+    cents, cb = _tricky_state()
+    full = _toy_corpus(spark, n=400)
+    queries = full.filter(F.col("vec_id") % 60 == 0)
+    path = str(tmp_path / "pq_jobs")
+    _, n_build = _spark_jobs(
+        spark,
+        lambda: rt.build_ivfpq_index(
+            full.filter(F.col("vec_id") <= 300), path, centroids=cents, codebooks=cb
+        ),
+    )
+    assert n_build == 1
+    assert _spark_jobs(spark, lambda: rt.load_ann_centroids(spark, path))[1] == 0
+    assert _spark_jobs(spark, lambda: rt.load_pq_codebooks(spark, path))[1] == 0
+    _, n_extend = _spark_jobs(
+        spark, lambda: rt.extend_ivfpq_index(full.filter(F.col("vec_id") > 300), path)
+    )
+    assert n_extend == 1
+    # the query's only action: the distinct probed-cid collect
+    _, n_probe = _spark_jobs(
+        spark,
+        lambda: queries.select(
+            F.explode(sim.probe_cids_expr(sim._as_double("embedding"), cents, 2))
+        ).distinct().collect(),
+    )
+    _, n_query = _spark_jobs(
+        spark, lambda: rt.query_ivfpq_index(spark, path, queries, k=5, n_probe=2)
+    )
+    assert n_query == n_probe
+    rt.delete_from_index(full.filter(F.col("vec_id") % 7 == 0), path)
+    _, n_query = _spark_jobs(
+        spark, lambda: rt.query_ivfpq_index(spark, path, queries, k=5, n_probe=2)
+    )
+    assert n_query == n_probe
+
+
+def test_ivfpq_sidecar_crash_leaving_only_tmp_self_heals(spark, tmp_path):
+    """The Hadoop writer deletes the old sidecar before renaming the
+    temp file in; a crash between the two leaves only ``<sidecar>__tmp``.
+    The next load promotes it, and the query answers identically."""
+    cents, cb = _tricky_state()
+    corpus = _toy_corpus(spark)
+    queries = corpus.filter(F.col("vec_id") % 40 == 0)
+    path = str(tmp_path / "pq_crash")
+    rt.build_ivfpq_index(corpus, path, centroids=cents, codebooks=cb)
+    want = sorted(map(tuple, rt.query_ivfpq_index(spark, path, queries, k=5).collect()))
+    sidecars = [rt._centroid_sidecar(path), rt._codebook_sidecar(path)]
+    for side in sidecars:
+        os.replace(side, side + "__tmp")
+    got = sorted(map(tuple, rt.query_ivfpq_index(spark, path, queries, k=5).collect()))
+    assert got == want
+    for side in sidecars:
+        assert os.path.isfile(side) and not os.path.exists(side + "__tmp")
+    assert [_bits(c) for c in rt.load_ann_centroids(spark, path)] == [
+        _bits(c) for c in cents
+    ]

@@ -122,3 +122,45 @@ def test_skew_profile_uniform_keys_need_no_salting(spark):
     assert len(prof) == 4
     assert all(r.salts_rec == 2 for r in prof)  # ceil(25*8/100)=2
     assert sum(r.share_ppm for r in prof) == 1000000
+
+
+def test_asof_result_identical_passes_correct_join_and_fails_perturbed(spark):
+    """bench_skew's as-of identity check must be able to say both
+    things: true for the fill-down join against the range join (with a
+    purchase that has no earlier click, so a NULL ``asof_ts`` the inner
+    range join never produces), false once one matched ts moves."""
+    from bench_skew import asof_result_identical
+
+    from bohemia_kenya_data_pipeline_spark.operators import windows as W
+
+    def frame(rows, ddl):
+        return spark.createDataFrame(rows, ddl).withColumn(
+            "ts", F.timestamp_seconds("t")
+        )
+
+    purchases = frame(
+        [(1, 1, 10), (2, 1, 30), (3, 2, 5)], "event_id INT, user_id INT, t INT"
+    )
+    clicks = frame(
+        [(1, 8, 1.0), (1, 20, 2.0), (2, 9, 3.0)], "user_id INT, t INT, click_value DOUBLE"
+    )
+    asof = W.asof_join(
+        purchases, clicks, ["user_id"], "ts", "ts", ["click_value"]
+    ).select("event_id", "asof_ts")
+    c = clicks.withColumnRenamed("ts", "cts")
+    naive = (
+        purchases.join(
+            c, (purchases["user_id"] == c["user_id"]) & (F.col("cts") <= purchases["ts"])
+        )
+        .groupBy("event_id")
+        .agg(F.max("cts").alias("asof_ts"))
+    )
+    assert asof.filter(F.col("asof_ts").isNull()).count() == 1
+    assert asof_result_identical(asof, naive)
+    moved = asof.withColumn(
+        "asof_ts",
+        F.when(
+            F.col("event_id") == 2, F.col("asof_ts") + F.expr("INTERVAL 1 SECOND")
+        ).otherwise(F.col("asof_ts")),
+    )
+    assert not asof_result_identical(moved, naive)

@@ -12,10 +12,17 @@ ran by hand, codified so they can't regress silently.
    filters with GENUINE predicates (rlike, endswith, positional,
    runtime-array comparisons) are allowed; only the equality-to-""
    pattern has a native replacement.
+3. No schema-inferring parquet reads in the lifecycle modules: a
+   ``.read[.option(...)].parquet(`` chain without ``.schema(`` runs a
+   footer-inference Spark job per call. The lifecycle ticks read
+   parquet the engine itself wrote, so they go through
+   ``session.parquet_scan`` (schema from a local footer); only the
+   reads of EXTERNAL input listed below may infer.
 """
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -73,3 +80,73 @@ def test_extra_conf_typo_fails_loud(monkeypatch):
     )
     with pytest.raises(ValueError, match="not 'key=value'"):
         get_spark(app_name="conf-typo-test")
+
+
+#: modules whose ticks read engine-written parquet on every batch
+LIFECYCLE_MODULES = (
+    "operators/maintenance.py",
+    "operators/skipping.py",
+    "operators/dedup.py",
+    "jobs/retrieval.py",
+)
+
+#: (module, function) of the reads of external input, which may infer
+INFERRING_READ_ALLOWED = {
+    ("operators/maintenance.py", "dataset_file_stats"),
+    ("operators/maintenance.py", "compact"),
+}
+
+
+def _inferring_parquet_reads(src: str) -> set[tuple[str, int]]:
+    """(innermost enclosing function, line) of every ``<x>.read``
+    [``.option(...)``/``.options(...)``] ``.parquet(...)`` call chain,
+    i.e. a parquet read that sets no schema."""
+    hits: dict[int, tuple[int, str]] = {}
+    for fn in ast.walk(ast.parse(src)):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for node in ast.walk(fn):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+            ):
+                continue
+            obj = node.func.value
+            while (
+                isinstance(obj, ast.Call)
+                and isinstance(obj.func, ast.Attribute)
+                and obj.func.attr in ("option", "options")
+            ):
+                obj = obj.func.value
+            if isinstance(obj, ast.Attribute) and obj.attr == "read":
+                # nested functions: keep the innermost (latest start)
+                if node.lineno not in hits or hits[node.lineno][0] < fn.lineno:
+                    hits[node.lineno] = (fn.lineno, fn.name)
+    return {(name, line) for line, (_, name) in hits.items()}
+
+
+def test_inferring_read_detector_can_fail():
+    src = (
+        "def f(spark, p, fs):\n"
+        "    a = spark.read.parquet(p)\n"
+        "    b = spark.read.option('basePath', p).parquet(\n"
+        "        *fs)\n"
+        "    c = spark.read.schema('a INT').option('basePath', p).parquet(*fs)\n"
+        "    spark.range(1).write.mode('overwrite').parquet(p)\n"
+    )
+    assert _inferring_parquet_reads(src) == {("f", 2), ("f", 3)}
+
+
+def test_lifecycle_modules_read_engine_parquet_without_inference():
+    found = {
+        (mod, name)
+        for mod in LIFECYCLE_MODULES
+        for name, _ in _inferring_parquet_reads((PKG / mod).read_text())
+    }
+    assert found - INFERRING_READ_ALLOWED == set(), (
+        "schema-inferring parquet read in a lifecycle module: use "
+        "session.parquet_scan for engine-written data"
+    )
+    # the allow-list names live external-input reads, not stale ones
+    assert INFERRING_READ_ALLOWED <= found
