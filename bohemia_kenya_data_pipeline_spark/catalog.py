@@ -62,14 +62,6 @@ def load_tables(
     return {n: read_table(spark, zone_dir, n) for n in names}
 
 
-def register_temp_views(
-    spark: SparkSession, zone_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> None:
-    """Expose a zone's tables to ``spark.sql`` as temp views."""
-    for n, df in load_tables(spark, zone_dir, names).items():
-        df.createOrReplaceTempView(n)
-
-
 # --------------------------------------------------------------------------
 # Form-zone IO (reference: CSV in, parquet serving layer)
 # --------------------------------------------------------------------------

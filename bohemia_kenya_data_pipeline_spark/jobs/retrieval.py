@@ -60,89 +60,6 @@ def _write_centroids(
     )
 
 
-def _assign_for_index(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str,
-    id_col: str,
-    assign: str,
-) -> DataFrame:
-    """(id, vec, cid) for the index write — the one full-corpus pass.
-
-    ``assign="auto"`` picks the kernel by C×D: below
-    ``similarity.ARROW_ASSIGN_MIN_CXD`` the expression fold (JVM-side,
-    no Arrow transfer — right for toy/bench centroid counts and the
-    regime every oracle covers); at or above it the Arrow numpy-argmax
-    kernel (:func:`~..operators.similarity.assign_centroids_arrow`) —
-    at production centroid counts the fold is O(C×D) INTERPRETED per
-    corpus row, the exact island class the r6 Arrow work retired on
-    the scoring side (VERDICT r7 ask 1). Both kernels implement the
-    identical contract (unit-normalized argmax dot, ties → smaller
-    cid); parity is hash-asserted in ``tests/test_retrieval_index.py``.
-    """
-    if assign == "auto":
-        cxd = len(centroids) * len(centroids[0])
-        assign = "arrow" if cxd >= sim.ARROW_ASSIGN_MIN_CXD else "fold"
-    if assign == "arrow":
-        return sim.assign_centroids_arrow(
-            corpus.select(id_col, vec_col), centroids, vec_col, id_col
-        )
-    if assign != "fold":
-        raise ValueError(
-            f"assign must be 'auto', 'fold' or 'arrow', got {assign!r}"
-        )
-    # one SQL parse for literal + cast + argmax fold (r15; same tree,
-    # same interpreted execution — only plan construction changes)
-    vec_sql = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
-    return (
-        sim._drop_null_vecs(corpus, vec_col)
-        .select(id_col, vec_col)
-        .withColumn(
-            "cid",
-            F.expr(
-                sim._nearest_cid_sql(
-                    vec_sql, sim._centroid_literal_sql(centroids)
-                )
-            ),
-        )
-    )
-
-
-def _resolve_centroids(
-    corpus: DataFrame,
-    centroids: list[list[float]] | None,
-    n_centroids: int,
-    n_iters: int,
-    train_fraction: float | None,
-    vec_col: str,
-    id_col: str,
-    train: str,
-) -> list[list[float]]:
-    """Accept pre-trained centroids or train, kernel per ``train``
-    ("auto" switches on C against the threshold's C x 64 reference
-    shape — dim is not known without touching the data, and C alone
-    drives the fold's per-row cost)."""
-    if centroids is not None:
-        return centroids
-    if train == "auto":
-        train = (
-            "arrow" if n_centroids * 64 >= sim.ARROW_ASSIGN_MIN_CXD else "fold"
-        )
-    if train not in ("fold", "arrow"):
-        raise ValueError(f"train must be 'auto', 'fold' or 'arrow', got {train!r}")
-    trainer = (
-        sim.ivf_train_centroids_arrow if train == "arrow" else sim.ivf_train_centroids
-    )
-    return trainer(
-        corpus,
-        vec_col,
-        id_col,
-        n_centroids=n_centroids,
-        n_iters=n_iters,
-        train_fraction=train_fraction,
-    )
-
-
 def build_ann_index(
     corpus: DataFrame,
     index_path: str,
@@ -152,24 +69,18 @@ def build_ann_index(
     train_fraction: float | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
-    train: str = "auto",
 ) -> list[list[float]]:
     """Train (or accept) centroids, assign every corpus vector, write
     the index partitioned by ``cid``, persist the JSON centroid sidecar.
     One full pass over the corpus; the shuffle is the partitioned
-    write's file routing. Assignment kernel per ``assign`` (see
-    :func:`_assign_for_index`; "auto" = Arrow above the C×D
-    threshold); implicit training picks its kernel the same way via
-    ``train`` (the Arrow trainer replaces each Lloyd round's
-    interpreted fold + posexplode shuffle with one partial-sum
-    mapInPandas pass — same fixed point, see
-    ``similarity.ivf_train_centroids_arrow``). Returns the centroids."""
-    centroids = _resolve_centroids(
-        corpus, centroids, n_centroids, n_iters, train_fraction,
-        vec_col, id_col, train,
-    )
-    assigned = _assign_for_index(corpus, centroids, vec_col, id_col, assign)
+    write's file routing. Assignment and implicit training pick their
+    kernel from C×D (``similarity.assign_centroids`` /
+    ``similarity.ivf_train_centroids``). Returns the centroids."""
+    if centroids is None:
+        centroids = sim.ivf_train_centroids(
+            corpus, vec_col, id_col, n_centroids, n_iters, train_fraction
+        )
+    assigned = sim.assign_centroids(corpus, centroids, vec_col, id_col)
     assigned.write.mode("overwrite").partitionBy("cid").parquet(index_path)
     spark = corpus.sparkSession
     _drop_stale_tombstones(spark, index_path)
@@ -384,7 +295,6 @@ def index_ingest_drift(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     eps: float = 1e-4,
-    assign: str = "auto",
 ) -> DataFrame:
     """The rebuild-cadence gate the extend docstrings defer to, made
     concrete: PSI between the LIVE index's per-cid share and an
@@ -405,7 +315,7 @@ def index_ingest_drift(
     centroids = load_ann_centroids(spark, index_path)
     spine = spark.range(len(centroids)).select(F.col("id").cast("int").alias("cid"))
     live = index_stats(spark, index_path, id_col=id_col).select("cid", "live_rows")
-    assigned = _assign_for_index(new_rows, centroids, vec_col, id_col, assign)
+    assigned = sim.assign_centroids(new_rows, centroids, vec_col, id_col)
     batch = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("batch_rows"))
     j = (
         spine.join(live, "cid", "left")
@@ -437,8 +347,6 @@ def retrain_index(
     n_iters: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
-    kernel: str = "auto",
 ) -> list[list[float]]:
     """Re-center a plain ANN index on its own LIVE stored vectors:
     warm-start Lloyd from the sidecar centroids
@@ -474,9 +382,9 @@ def retrain_index(
         id_col,
     )
     new_cents = sim.ivf_refine_centroids(
-        live, centroids, vec_col, id_col, n_iters=n_iters, kernel=kernel
+        live, centroids, vec_col, id_col, n_iters=n_iters
     )
-    assigned = _assign_for_index(live, new_cents, vec_col, id_col, assign)
+    assigned = sim.assign_centroids(live, new_cents, vec_col, id_col)
     stage = index_path.rstrip("/") + "__stage"
     assigned.write.mode("overwrite").partitionBy("cid").parquet(stage)
     _swap_in(spark, index_path, stage)
@@ -655,7 +563,6 @@ def extend_ann_index(
     index_path: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
 ) -> None:
     """Incrementally index new vectors: assign against the SIDECAR
     centroids (no retraining, no rebuild) and append into the existing
@@ -671,7 +578,7 @@ def extend_ann_index(
     spark = new_rows.sparkSession
     _compact_if_readmitting(new_rows, index_path, id_col)
     centroids = load_ann_centroids(spark, index_path)
-    assigned = _assign_for_index(new_rows, centroids, vec_col, id_col, assign)
+    assigned = sim.assign_centroids(new_rows, centroids, vec_col, id_col)
     assigned.write.mode("append").partitionBy("cid").parquet(index_path)
 
 
@@ -702,8 +609,6 @@ def build_ivfpq_index(
     train_fraction: float | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
-    train: str = "auto",
     store_vec: bool = False,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """The 100 TB vector-store layout: one corpus pass assigns every
@@ -727,15 +632,15 @@ def build_ivfpq_index(
     need no training state. Returns
     ``(centroids, codebooks)``.
     """
-    centroids = _resolve_centroids(
-        corpus, centroids, n_centroids, n_iters, train_fraction,
-        vec_col, id_col, train,
-    )
+    if centroids is None:
+        centroids = sim.ivf_train_centroids(
+            corpus, vec_col, id_col, n_centroids, n_iters, train_fraction
+        )
     if codebooks is None:
         codebooks = sim.pq_train_codebooks(
             corpus, n_subspaces, n_codewords, vec_col=vec_col
         )
-    assigned = _assign_for_index(corpus, centroids, vec_col, id_col, assign)
+    assigned = sim.assign_centroids(corpus, centroids, vec_col, id_col)
     extra = ("cid", vec_col) if store_vec else ("cid",)
     coded = sim.pq_encode(assigned, codebooks, vec_col, id_col, extra_cols=extra)
     coded.write.mode("overwrite").partitionBy("cid").parquet(index_path)
@@ -755,7 +660,6 @@ def extend_ivfpq_index(
     index_path: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
 ) -> None:
     """Incrementally index new vectors into a compressed IVF-PQ
     layout: assign against the SIDECAR centroids and PQ-encode with
@@ -781,7 +685,7 @@ def extend_ivfpq_index(
     store_vec = vec_col in (
         st.fieldNames() if st is not None else parquet_scan(spark, index_path).columns
     )
-    assigned = _assign_for_index(new_rows, centroids, vec_col, id_col, assign)
+    assigned = sim.assign_centroids(new_rows, centroids, vec_col, id_col)
     extra = ("cid", vec_col) if store_vec else ("cid",)
     coded = sim.pq_encode(assigned, codebooks, vec_col, id_col, extra_cols=extra)
     coded.write.mode("append").partitionBy("cid").parquet(index_path)

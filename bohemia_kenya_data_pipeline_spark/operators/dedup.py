@@ -79,7 +79,6 @@ def _cap_buckets(
     keys: list[str],
     id_col: str,
     max_bucket_size: int | None,
-    strategy: str = "sample",
 ) -> DataFrame:
     """Bound per-bucket membership before a bucket self-join.
 
@@ -91,11 +90,9 @@ def _cap_buckets(
     the shuffle partition but not the O(c^2) pair count — the only
     real fix is to bound c before the join.
 
-    ``strategy='sample'`` (default) keeps a deterministic
-    ``max_bucket_size``-member subset per bucket (row_number ordered
-    by id), preserving partial recall inside oversized buckets at a
-    bounded cap^2 pair cost. ``strategy='drop'`` removes oversized
-    buckets entirely (a doc still pairs via its other bands).
+    The guard keeps a deterministic ``max_bucket_size``-member subset
+    per bucket (row_number ordered by id), preserving partial recall
+    inside oversized buckets at a bounded cap^2 pair cost.
 
     The window partitions by the same keys the join shuffles on, so
     the exchange is the one the join needs anyway. ``None`` disables
@@ -113,18 +110,9 @@ def _cap_buckets(
         raise ValueError(
             f"max_bucket_size={max_bucket_size}: a bucket needs >= 2 members to pair"
         )
-    if strategy not in ("sample", "drop"):
-        raise ValueError(f"unknown strategy {strategy!r}: use 'sample' or 'drop'")
-    if strategy == "drop":
-        w = Window.partitionBy(*keys)
-        return (
-            rows.withColumn("_bucket_n", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bucket_n") <= max_bucket_size)
-            .drop("_bucket_n")
-        )
-    # sample: rank <= cap alone suffices (rank never exceeds the
-    # bucket count, so under-cap buckets pass whole) — one window, not
-    # a count plus a rank
+    # rank <= cap alone suffices (rank never exceeds the bucket count,
+    # so under-cap buckets pass whole) — one window, not a count plus
+    # a rank
     wo = Window.partitionBy(*keys).orderBy(F.col(id_col))
     return (
         rows.withColumn("_bucket_rk", F.row_number().over(wo))
@@ -332,7 +320,6 @@ def minhash_lsh_pairs(
     shingle_n: int = 2,
     seed: int = 42,
     max_bucket_size: int | None = None,
-    cap_strategy: str = "sample",
 ) -> DataFrame:
     """LSH candidate pairs: split signatures into ``bands`` bands of
     r = num_hashes/bands rows; docs sharing any band bucket are
@@ -347,7 +334,7 @@ def minhash_lsh_pairs(
     :func:`minhash_bucket_stats` to size the cap from data.
     """
     band_rows = _minhash_band_rows(df, text_col, id_col, num_hashes, bands, shingle_n, seed)
-    band_rows = _cap_buckets(band_rows, ["band", "bucket"], "id", max_bucket_size, cap_strategy)
+    band_rows = _cap_buckets(band_rows, ["band", "bucket"], "id", max_bucket_size)
     a = band_rows.select(F.col("id").alias("id_a"), "band", "bucket")
     b = band_rows.select(F.col("id").alias("id_b"), "band", "bucket")
     return (
@@ -433,7 +420,6 @@ def embedding_neardup_pairs(
     dim: int = 64,
     seed: int = 42,
     max_bucket_size: int | None = None,
-    cap_strategy: str = "sample",
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold, with
     multi-table sign-LSH candidate generation: each side hashes into
@@ -456,7 +442,7 @@ def embedding_neardup_pairs(
         .withColumn("n", norm(F.col("v")))
         .withColumn("tb", F.explode(lsh_table_buckets(F.col("v"), planes, n_tables)))
     )
-    base = _cap_buckets(base, ["tb"], "id", max_bucket_size, cap_strategy)
+    base = _cap_buckets(base, ["tb"], "id", max_bucket_size)
     a = base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"), F.col("n").alias("n_a"), "tb")
     b = base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"), F.col("n").alias("n_b"), "tb")
     pairs = (
@@ -592,7 +578,6 @@ def simhash_neardup_pairs(
     bits: int = 32,
     max_hamming: int = 3,
     max_bucket_size: int | None = None,
-    cap_strategy: str = "sample",
 ) -> DataFrame:
     """SimHash near-dup pairs: band the fingerprint into 4 bytes and
     equi-join on (band, byte) — by pigeonhole, any pair within
@@ -615,7 +600,7 @@ def simhash_neardup_pairs(
             "join would silently miss pairs (pigeonhole only covers <= bands-1)"
         )
     bands = _simhash_band_rows(df, text_col, id_col, bits)
-    bands = _cap_buckets(bands, ["band", "chunk"], "id", max_bucket_size, cap_strategy)
+    bands = _cap_buckets(bands, ["band", "chunk"], "id", max_bucket_size)
     a = bands.select(F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "band", "chunk")
     b = bands.select(F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "band", "chunk")
     cand = (
@@ -1211,8 +1196,6 @@ def semantic_dedup_pairs(
     threshold: float = 0.8,
     anchors: list[list[float]] | None = None,
     max_cluster_size: int | None = None,
-    cap_strategy: str = "sample",
-    probe_partitions: int | str | None = "auto",
 ) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs (Abbas et al. 2023,
     arXiv:2303.09540): bucket embeddings by nearest anchor/centroid,
@@ -1229,7 +1212,7 @@ def semantic_dedup_pairs(
     literals (no shuffle); the only shuffle is the cid equi-join.
     Within-cluster candidates are quadratic in CLUSTER size, the same
     hazard as an LSH hot bucket — ``max_cluster_size`` applies the
-    shared ``_cap_buckets`` guard (deterministic sample or drop), and
+    shared ``_cap_buckets`` guard (deterministic per-cluster sample), and
     ``semantic_cluster_stats`` prices the cap before the join runs.
     For web-scale corpora raise ``n_anchors`` so mean cluster size
     stays O(corpus / n_anchors) bounded; anchors stay driver metadata
@@ -1238,34 +1221,30 @@ def semantic_dedup_pairs(
     Returns (id_a, id_b, cid, cosine) with id_a < id_b, cosine
     rounded to 4 dp.
 
-    ``probe_partitions`` (r15): parallelism of the pair-scoring pass.
-    The planner broadcasts the (anchor-bucketed) build side when it
-    fits, so the scoring task count equals the PROBE side's scan
+    Pair-scoring parallelism (r15): the planner broadcasts the
+    (anchor-bucketed) build side when it fits, so the scoring task
+    count equals the PROBE side's scan
     splits — a corpus smaller than one ``maxPartitionBytes`` split
     scores every within-cluster pair in ONE task no matter how many
     cores exist (measured at the 10x replica: 25.3M pairs, 96 s
     single-task vs 10.3 s spread — block-SALTING cannot fix this
-    because a broadcast join has no per-key partitions to salt).
-    ``"auto"`` repartitions the probe side by id hash to
+    because a broadcast join has no per-key partitions to salt). So
+    the probe side is repartitioned by id hash to
     2 x defaultParallelism ONLY when its natural partitioning is below
     the session's parallelism — a no-op decision at production corpus
     sizes where the scan already yields thousands of splits, so the
-    extra exchange is never paid at scale. An int forces that width;
-    ``None``/0 keeps the raw scan partitioning.
+    extra exchange is never paid at scale.
     """
     from .similarity import cosine_prenormed_fixed
 
     if anchors is None:
         anchors = semantic_anchor_vectors(emb, vec_col, id_col, n_anchors)
     assigned = assign_semantic_cluster(emb, anchors, vec_col, id_col)
-    assigned = _cap_buckets(assigned, ["cid"], "id", max_cluster_size, cap_strategy)
+    assigned = _cap_buckets(assigned, ["cid"], "id", max_cluster_size)
     probe = assigned
-    if probe_partitions == "auto":
-        target = emb.sparkSession.sparkContext.defaultParallelism
-        if assigned.rdd.getNumPartitions() < target:
-            probe = assigned.repartition(2 * target, "id")
-    elif probe_partitions:
-        probe = assigned.repartition(int(probe_partitions), "id")
+    target = emb.sparkSession.sparkContext.defaultParallelism
+    if assigned.rdd.getNumPartitions() < target:
+        probe = assigned.repartition(2 * target, "id")
     a = probe.select(
         F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nv").alias("na"), "cid"
     )
@@ -1356,7 +1335,6 @@ def duplicate_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_docs: int = 2,
-    plan: str = "window",
 ) -> DataFrame:
     """Exact duplicated-substring detection (the token-level dedup of
     Lee et al. 2022, "Deduplicating Training Data Makes Language Models
@@ -1383,26 +1361,18 @@ def duplicate_spans(
     unlikely at any corpus size) → duplicated positions → per-doc
     ordered window merging islands.
 
-    ``plan='window'`` (default, r14): ONE position shuffle on the
-    16-byte key, with the distinct-doc count computed in-partition as
-    ``max(dense_rank over (key ORDER BY doc))`` — the gram+md5 pass
-    runs ONCE and there is no second (key, doc)-distinct shuffle or
-    join-back (measured 3.1 → 1.5 s on the bench corpus; identical
-    rows). ``plan='join'`` keeps the prior two-pass shape — distinct
-    (key, doc) → count → SEMI join back onto a second gram pass —
-    whose join side can broadcast when duplicated keys are rare, and
-    whose positions stay spread when ONE shingle recurs in millions of
-    docs (the window plan places a key's every position in one task;
-    prefer 'join' for corpora with single-shingle hot keys). Both
-    plans return identical rows. 100 TB: every stage is linear in
-    corpus token count either way.
+    ONE position shuffle on the 16-byte key, with the distinct-doc
+    count computed in-partition as ``max(dense_rank over (key ORDER BY
+    doc))`` — the gram+md5 pass runs ONCE and there is no second
+    (key, doc)-distinct shuffle or join-back: 1.5 s vs 3.1 s for a
+    two-pass distinct → count → semi-join plan on the bench corpus
+    (r14, identical rows), and 2.34 vs 4.74 s even on single-shingle
+    hot keys (``BENCH_skew_r15.json``). 100 TB: every stage is linear
+    in corpus token count.
 
     Returns (id, span_start, span_end, span_tokens) with 1-based
     token positions, span_end inclusive.
     """
-    if plan not in ("window", "join"):
-        raise ValueError(f"unknown plan {plan!r}: use 'window' or 'join'")
-
     def grams(tk: Column) -> Column:
         return F.transform(
             F.sequence(F.lit(0), F.size(tk) - n),
@@ -1420,27 +1390,16 @@ def duplicate_spans(
             F.conv(F.substring(md, 16, 15), 16, 10).cast("bigint").alias("h2"),
         )
     )
-    if plan == "window":
-        w_key = Window.partitionBy("h1", "h2").orderBy(id_col)
-        w_all = Window.partitionBy("h1", "h2").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        dup_pos = (
-            pos.withColumn("__dr", F.dense_rank().over(w_key))
-            .withColumn("__nd", F.max("__dr").over(w_all))
-            .filter(F.col("__nd") >= min_docs)
-            .select(id_col, "pos")
-        )
-    else:
-        dup_h = (
-            pos.select("h1", "h2", id_col)
-            .distinct()
-            .groupBy("h1", "h2")
-            .agg(F.count(F.lit(1)).alias("nd"))
-            .filter(F.col("nd") >= min_docs)
-            .select("h1", "h2")
-        )
-        dup_pos = pos.join(dup_h, ["h1", "h2"], "semi")
+    w_key = Window.partitionBy("h1", "h2").orderBy(id_col)
+    w_all = Window.partitionBy("h1", "h2").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    dup_pos = (
+        pos.withColumn("__dr", F.dense_rank().over(w_key))
+        .withColumn("__nd", F.max("__dr").over(w_all))
+        .filter(F.col("__nd") >= min_docs)
+        .select(id_col, "pos")
+    )
     w_prev = (
         Window.partitionBy(id_col)
         .orderBy("pos")

@@ -50,19 +50,17 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     persist_each: bool = False,
-    cache_inputs: bool = True,
 ) -> DataFrame:
     """Run ``n_iter`` PageRank rounds over ``edges`` (deduplicated by
     the caller if multi-edges should not double-count). Returns
     ``(node, rank)`` for every node appearing as src or dst.
 
-    ``cache_inputs`` persists the weighted-edge and node tables the
-    loop re-reads every round — without it, an edges input that is
-    itself a join/distinct pipeline gets recomputed once per
-    consumer per round (measured 2x wall on the sf0.1 trade graph).
-    Disable when the caller already persisted them. The persists are
-    lazy; Spark drops them by LRU/weak-ref when the result's lineage
-    is released.
+    The weighted-edge and node tables the loop re-reads every round
+    are persisted — otherwise an edges input that is itself a
+    join/distinct pipeline gets recomputed once per consumer per
+    round (measured 2x wall on the sf0.1 trade graph). The persists
+    are lazy; Spark drops them by LRU/weak-ref when the result's
+    lineage is released.
 
     Deterministic up to float-summation order; callers comparing
     across engines should round (see the registered oracle).
@@ -76,9 +74,8 @@ def pagerank(
     deg = out_degrees(e)
     # weight each edge once: contribution factor 1/outdeg(src)
     ew = e.join(deg, "src").select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("inv_deg"))
-    if cache_inputs:
-        nodes = nodes.persist()
-        ew = ew.persist()
+    nodes = nodes.persist()
+    ew = ew.persist()
 
     ranks = nodes.withColumn("r", F.lit(1.0))
     prev = None
@@ -108,7 +105,6 @@ def pagerank_ppm(
     damping_ppm: int = 850_000,
     src: str = "src",
     dst: str = "dst",
-    cache_inputs: bool = True,
 ) -> DataFrame:
     """Fixed-point PageRank in parts-per-million BIGINT arithmetic —
     the hash-stable sibling of :func:`pagerank` (round-13 hash-
@@ -140,7 +136,8 @@ def pagerank_ppm(
     non-ANSI Spark wraps silently.
 
     Same scale design as :func:`pagerank`: one shuffle per round on
-    the join key, node-cardinality rank table, driver-side loop.
+    the join key, node-cardinality rank table, driver-side loop, and
+    the same lazy persist of the per-round inputs.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = (
@@ -150,9 +147,8 @@ def pagerank_ppm(
     )
     deg = out_degrees(e)
     ew = e.join(deg, "src").select("src", "dst", "outdeg")
-    if cache_inputs:
-        nodes = nodes.persist()
-        ew = ew.persist()
+    nodes = nodes.persist()
+    ew = ew.persist()
 
     base = int(1_000_000 - damping_ppm)
     ranks = nodes.withColumn("r", F.lit(1_000_000).cast("long"))

@@ -369,12 +369,11 @@ def _nearest_cid(vec: Column, cents: Column) -> Column:
 
 def _seed_centroids(
     base: DataFrame, n_centroids: int, train_fraction: float | None
-) -> tuple[list[list[float]], int]:
-    """Deterministic k-means init shared by both training kernels: the
-    ``n_centroids`` vectors with the smallest md5(id) — order-stable
-    across partitioning, no RNG state. Returns (centroids,
-    effective_n_centroids); degrades to the corpus size on a tiny
-    full corpus, raises on a too-thin explicit sample."""
+) -> list[list[float]]:
+    """Deterministic k-means init: the ``n_centroids`` vectors with the
+    smallest md5(id) — order-stable across partitioning, no RNG state.
+    Degrades to the corpus size on a tiny full corpus, raises on a
+    too-thin explicit sample."""
     seed_rows = (
         base.withColumn("_h", F.md5(F.col("id").cast("string")))
         .orderBy("_h")
@@ -383,19 +382,41 @@ def _seed_centroids(
     )
     if not seed_rows:
         raise ValueError("cannot train centroids on an empty corpus")
-    if len(seed_rows) < n_centroids:
-        if train_fraction is not None:
-            # the caller's sample is too thin — say so, and name the
-            # knob they actually used
-            raise ValueError(
-                f"training sample has only {len(seed_rows)} vectors for "
-                f"{n_centroids} centroids — raise train_fraction"
-            )
-        # tiny corpus, full-corpus training: degrade gracefully to as
-        # many centroids as there are vectors (ivf_topk works with any
-        # centroid count; exhaustive probing still exact)
-        n_centroids = len(seed_rows)
-    return [list(r.v) for r in seed_rows], n_centroids
+    if len(seed_rows) < n_centroids and train_fraction is not None:
+        # the caller's sample is too thin — say so, and name the knob
+        # they actually used
+        raise ValueError(
+            f"training sample has only {len(seed_rows)} vectors for "
+            f"{n_centroids} centroids — raise train_fraction"
+        )
+    # tiny corpus, full-corpus training: as many centroids as there are
+    # vectors (ivf_topk works with any centroid count; exhaustive
+    # probing still exact)
+    return [list(r.v) for r in seed_rows]
+
+
+def _lloyd_base(corpus: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    return _drop_null_vecs(corpus, vec_col).select(
+        F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
+    )
+
+
+def _lloyd(
+    base: DataFrame, centroids: list[list[float]], n_iters: int
+) -> list[list[float]]:
+    """``n_iters`` Lloyd rounds over (id, v) rows, each on the kernel
+    :func:`_arrow_kernel` picks for the real C×D: the expression fold
+    (:func:`_lloyd_round_fold`) or one Arrow partial-sum pass
+    (:func:`_lloyd_round_arrow`). Both share the contract —
+    argmax-cosine assignment with ties to the smaller cid,
+    per-dimension mean, empty clusters keep their previous centroid —
+    and reach the same fixed point up to float summation order
+    (~1e-9 per component on the fixture, identical downstream
+    assignments; ``tests/test_similarity.py``)."""
+    rnd = _lloyd_round_arrow if _arrow_kernel(centroids) else _lloyd_round_fold
+    for _ in range(n_iters):
+        centroids = rnd(base, centroids)
+    return [[float(x) for x in c] for c in centroids]
 
 
 def ivf_train_centroids(
@@ -411,11 +432,13 @@ def ivf_train_centroids(
 
     Init: the ``n_centroids`` corpus vectors with the smallest
     md5(id) — order-stable across partitioning, no RNG state. Then
-    ``n_iters`` Lloyd rounds, each ONE shuffle: assign every vector to
-    its argmax-cosine centroid (map-side fold over the centroid
-    literal), then per-dimension ``avg`` groupBy. Per-round driver
-    traffic is k×dim doubles (centroid metadata, like a schema).
-    Empty clusters keep their previous centroid.
+    ``n_iters`` Lloyd rounds (:func:`_lloyd`), each ONE pass: below
+    ``ARROW_ASSIGN_MIN_CXD`` a map-side argmax fold over the centroid
+    literal plus a per-dimension ``avg`` groupBy; at or above it one
+    ``mapInPandas`` pass emitting per-partition partial sums, so the
+    fold's O(C×D)-per-row interpreted cost never dominates at
+    production centroid counts. Per-round driver traffic is k×dim
+    doubles (centroid metadata, like a schema).
 
     ``train_fraction`` is the 100 TB knob: centroid quality needs
     representativeness, not the full corpus, and full-corpus training
@@ -436,21 +459,15 @@ def ivf_train_centroids(
                 f"train_fraction must be in (0, 1], got {train_fraction}"
             )
         corpus = sample_by_hash(corpus, id_col, train_fraction, seed)
-    base = _drop_null_vecs(corpus, vec_col).select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-    )
+    base = _lloyd_base(corpus, vec_col, id_col)
     # the seed pass + every Lloyd round scans `base`: persist so the
     # corpus projection is paid once, not n_iters+1 times
     base.persist()
     try:
-        centroids, n_centroids = _seed_centroids(
-            base, n_centroids, train_fraction
-        )
-        for _ in range(n_iters):
-            centroids = _lloyd_round_fold(base, centroids)
+        centroids = _seed_centroids(base, n_centroids, train_fraction)
+        return _lloyd(base, centroids, n_iters)
     finally:
         base.unpersist()
-    return centroids
 
 
 def _lloyd_round_fold(
@@ -494,97 +511,22 @@ def ivf_refine_centroids(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_iters: int = 1,
-    kernel: str = "auto",
 ) -> list[list[float]]:
     """Warm-start Lloyd: refine GIVEN centroids over a corpus for
-    ``n_iters`` rounds — the retraining face of the two trainers
-    (which seed from md5-smallest ids and then run this same loop).
-    Used by ``jobs.retrieval.retrain_index`` to re-center a serving
-    index's centroids on its LIVE stored vectors after
-    ``index_ingest_drift`` crosses the rebuild band, without touching
-    the source corpus. ``kernel`` picks the round implementation the
-    way ``build_ann_index(assign=...)`` does: "fold" (JVM expression
-    fold — right below ``ARROW_ASSIGN_MIN_CXD``) or "arrow" (one
-    mapInPandas partial-sum pass per round); "auto" switches on C×D.
-    Both kernels share the contract: argmax-cosine assignment with
-    ties to the smaller cid, per-dimension mean, empty clusters keep
-    their previous centroid."""
+    ``n_iters`` rounds — the retraining face of
+    :func:`ivf_train_centroids` (which seeds from md5-smallest ids and
+    then runs this same :func:`_lloyd` loop). Used by
+    ``jobs.retrieval.retrain_index`` to re-center a serving index's
+    centroids on its LIVE stored vectors after ``index_ingest_drift``
+    crosses the rebuild band, without touching the source corpus."""
     if not centroids:
         raise ValueError("cannot refine an empty centroid list")
-    if kernel == "auto":
-        cxd = len(centroids) * len(centroids[0])
-        kernel = "arrow" if cxd >= ARROW_ASSIGN_MIN_CXD else "fold"
-    if kernel not in ("fold", "arrow"):
-        raise ValueError(
-            f"kernel must be 'auto', 'fold' or 'arrow', got {kernel!r}"
-        )
-    rnd = _lloyd_round_arrow if kernel == "arrow" else _lloyd_round_fold
-    base = _drop_null_vecs(corpus, vec_col).select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-    )
+    base = _lloyd_base(corpus, vec_col, id_col)
     base.persist()
     try:
-        centroids = [[float(x) for x in c] for c in centroids]
-        for _ in range(n_iters):
-            centroids = rnd(base, centroids)
+        return _lloyd(base, centroids, n_iters)
     finally:
         base.unpersist()
-    return [[float(x) for x in c] for c in centroids]
-
-
-def ivf_train_centroids_arrow(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int = 8,
-    n_iters: int = 5,
-    train_fraction: float | None = None,
-    seed: int = 42,
-) -> list[list[float]]:
-    """Spherical-k-means training, Arrow-vectorized — the training
-    twin of :func:`assign_centroids_arrow` (r8): same deterministic
-    md5-seeding and empty-cluster handling as
-    :func:`ivf_train_centroids`, but each Lloyd round is ONE
-    ``mapInPandas`` pass emitting per-PARTITION partial sums
-    ``(cid, count, Σv)`` instead of a per-row interpreted argmax fold
-    plus a posexplode shuffle. At production centroid counts
-    (10²–10⁴) the fold's O(C×D)-per-row interpreted cost dominates
-    every round; here assignment is one (B×D)@(D×C) numpy argmax per
-    batch and the per-dimension means reduce driver-side over
-    ``partitions × occupied_cids`` partial rows — metadata-sized for
-    sampled training (``train_fraction``, the 100 TB knob, keeps the
-    sample's partition count small; coalesce the sample if you train
-    at extreme C on many partitions).
-
-    Semantics: identical Lloyd fixed point up to float summation
-    order (partials are combined in sorted (cid, partition) order, so
-    the result is DETERMINISTIC for a fixed input layout — the same
-    determinism class as the fold path, whose Spark ``avg`` also
-    fixes an order per layout; measured on the fixture the two
-    kernels' centroids agree to ~1e-9 per component and produce
-    identical downstream assignments — ``tests/test_similarity.py``).
-    """
-    if train_fraction is not None:
-        from .sampling import sample_by_hash
-
-        if not 0 < train_fraction <= 1:
-            raise ValueError(
-                f"train_fraction must be in (0, 1], got {train_fraction}"
-            )
-        corpus = sample_by_hash(corpus, id_col, train_fraction, seed)
-    base = _drop_null_vecs(corpus, vec_col).select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-    )
-    base.persist()
-    try:
-        centroids, n_centroids = _seed_centroids(
-            base, n_centroids, train_fraction
-        )
-        for _ in range(n_iters):
-            centroids = _lloyd_round_arrow(base, centroids)
-    finally:
-        base.unpersist()
-    return [[float(x) for x in c] for c in centroids]
 
 
 def _lloyd_round_arrow(
@@ -888,18 +830,6 @@ def _l2sq_lit(vec: Column, base: int, cw: list[float]) -> Column:
     )
 
 
-def _codebook_literal(cb_m: list[list[float]]) -> Column:
-    return F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("k"),
-                F.array(*[F.lit(float(v)) for v in cw]).alias("cw"),
-            )
-            for k, cw in enumerate(cb_m)
-        ]
-    )
-
-
 def pq_code(vec: Column, codebooks: list[list[list[float]]]) -> Column:
     """PQ code of a vector: array<int> of length n_subspaces, entry m =
     argmin-L2 codeword id of subvector m (ties -> smaller id, via
@@ -926,38 +856,28 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    plan: str = "arrow",
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(id, pq_code): the compressed corpus representation — M small
     ints instead of dim floats (64-dim float32 -> 8 bytes at M=8, an
     8x memory cut before any scoring happens).
 
-    ``plan='arrow'`` (default) encodes in a vectorized pandas UDF —
-    one (batch, M, K) numpy distance tensor per Arrow batch. This is
-    the deliberate exception to the engine's built-ins-first rule:
-    the Column formulation needs K*M nested folds whose Catalyst
+    Encodes in a vectorized pandas UDF — one (batch, M, K) numpy
+    distance tensor per Arrow batch. This is the deliberate exception
+    to the engine's built-ins-first rule: the Column formulation
+    needs K*M nested folds whose Catalyst
     ANALYSIS alone costs seconds per query (and an unrolled
     arithmetic version breaks Janino's 64 KB method limit — see
     ``_l2sq_lit``), while the numpy tensor op is a microseconds-per-
-    row scan. ``plan='expr'`` keeps the pure-Column path as the
-    cross-engine bit-exactness reference (both hash-match the SQL
-    oracle: numpy's small-axis sums are sequential left-to-right,
-    same IEEE-double order as the fold and the SQL chain; ties break
-    to the first/smallest codeword id in all three).
+    row scan. :func:`pq_code` stays the pure-Column cross-engine
+    bit-exactness reference (both hash-match the SQL oracle: numpy's
+    small-axis sums are sequential left-to-right, same IEEE-double
+    order as the fold and the SQL chain; ties break to the
+    first/smallest codeword id in all three).
 
     ``extra_cols`` are carried through unchanged (e.g. a centroid id
     for an IVF-PQ layout) so encoding composes with an assignment pass
     without a re-join shuffle."""
-    carry = [F.col(c) for c in extra_cols]
-    if plan == "expr":
-        return df.select(
-            F.col(id_col),
-            pq_code(F.col(vec_col).cast("array<double>"), codebooks).alias("pq_code"),
-            *carry,
-        )
-    if plan != "arrow":
-        raise ValueError(f"unknown plan {plan!r}: use 'arrow' or 'expr'")
     cb = np.asarray(codebooks, dtype=np.float64)  # (M, K, sub)
     n_sub, _, sub = cb.shape
 
@@ -970,7 +890,9 @@ def pq_encode(
         return pd.Series(list(codes))
 
     return df.select(
-        F.col(id_col), encode(F.col(vec_col)).alias("pq_code"), *carry
+        F.col(id_col),
+        encode(F.col(vec_col)).alias("pq_code"),
+        *[F.col(c) for c in extra_cols],
     )
 
 
@@ -1248,11 +1170,6 @@ def quantize_embeddings(
     return df.select(*cols)
 
 
-def dequantize(q: Column, scale: Column) -> Column:
-    """array<double> reconstruction of a quantized vector."""
-    return F.transform(q, lambda x: x.cast("double") * scale)
-
-
 def quantized_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1379,16 +1296,56 @@ def rrf_fuse(
     return out.select(group_col, id_col, "rrf_nanos", "rank")
 
 
-#: C×D (n_centroids × dim) at or above which index build/extend
-#: assignment defaults to the Arrow kernel. Below it (e.g. the 8×64
-#: bench fixture = 512) the expression fold's per-row cost is a few
-#: hundred interpreted ops and JVM-side evaluation avoids the Arrow
-#: transfer; at production centroid counts (10²–10⁴ centroids) the
-#: fold is O(C×D) interpreted PER ROW on the one full-corpus pass a
-#: 100 TB deployment pays, while the numpy argmax stays one
-#: (B×D)@(D×C) BLAS call per batch (measured: 64×64 build 2.0×
-#: faster at sf0.1 and flat in C, see BENCH_scale_r08.json).
+#: C×D (n_centroids × dim) at or above which IVF assignment and Lloyd
+#: rounds run on the Arrow kernel (:func:`_arrow_kernel`). Below it
+#: (e.g. the 8×64 bench fixture = 512) the expression fold's per-row
+#: cost is a few hundred interpreted ops and JVM-side evaluation
+#: avoids the Arrow transfer; at production centroid counts (10²–10⁴
+#: centroids) the fold is O(C×D) interpreted PER ROW on the one
+#: full-corpus pass a 100 TB deployment pays, while the numpy argmax
+#: stays one (B×D)@(D×C) BLAS call per batch (measured: 64×64 build
+#: 2.0× faster at sf0.1 and flat in C, see BENCH_scale_r08.json).
 ARROW_ASSIGN_MIN_CXD = 1024
+
+
+def _arrow_kernel(centroids: list[list[float]]) -> bool:
+    """The one IVF kernel decision: Arrow when C×D reaches
+    ``ARROW_ASSIGN_MIN_CXD`` (read at call time), else the expression
+    fold. Both kernels implement the identical contract, so the choice
+    changes cost, never results (parity tests in
+    ``tests/test_retrieval_index.py`` and ``tests/test_similarity.py``
+    force each side by patching the constant)."""
+    return len(centroids) * len(centroids[0]) >= ARROW_ASSIGN_MIN_CXD
+
+
+def assign_centroids(
+    df: DataFrame,
+    centroids: list[list[float]],
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """(id, vec, cid) for every non-NULL vector: its argmax-cosine
+    centroid (ties → smaller cid) — the one full-corpus pass of an
+    index build/extend. Kernel per :func:`_arrow_kernel`: below the
+    threshold the expression fold, JVM-side with no Arrow transfer —
+    right for toy/bench centroid counts and the regime every oracle
+    covers; at or above it :func:`assign_centroids_arrow`, whose numpy
+    argmax stays flat where the fold is O(C×D) interpreted per row."""
+    if _arrow_kernel(centroids):
+        return assign_centroids_arrow(
+            df.select(id_col, vec_col), centroids, vec_col, id_col
+        )
+    # one SQL parse for literal + cast + argmax fold (r15; same tree,
+    # same interpreted execution — only plan construction changes)
+    vec_sql = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
+    return (
+        _drop_null_vecs(df, vec_col)
+        .select(id_col, vec_col)
+        .withColumn(
+            "cid",
+            F.expr(_nearest_cid_sql(vec_sql, _centroid_literal_sql(centroids))),
+        )
+    )
 
 
 def assign_centroids_arrow(

@@ -562,7 +562,6 @@ def nearest_neighbor_bucketed(
     cell_m: float = 5000.0,
     lat_ref: float = 0.0,
     levels: int = 3,
-    pin_leftovers: bool = False,
 ) -> DataFrame:
     """J12 at scale: exact nearest facility WITHOUT broadcasting the
     facility side — the grid-bucketed fallback the module docstring
@@ -602,24 +601,11 @@ def nearest_neighbor_bucketed(
     in doubt — it prices the leftover fraction for a candidate
     ``cell_m`` WITHOUT running the fallback pass.
 
-    ``pin_leftovers`` (r15 — guide §3.3/§5): materialize each level's
-    leftover set with ``localCheckpoint`` so escalation level k reads
-    a TRUNCATED plan instead of re-deriving the whole accept/anti-join
-    chain of levels 0..k-1 — the lazy chain recomputes the level-0
-    accept pass once per downstream reference (profiled: two ~1.3 s
-    single-task rederivation jobs on the dense bench shape, then the
-    slowest entry in the bench). The pinned frame is the LEFTOVER set
-    only — (id, lat, lon) keys, ~leftover_fraction of the points at
-    level 1 and geometrically less after — never facility payloads or
-    accepted output. Row values are identical (a checkpoint is a
-    materialization barrier, not a transformation).
-
-    Default OFF: pinning pays levels-1 eager checkpoint jobs, which
-    only wins when the accept pass is expensive per reference (dense
-    cells — the fixed-area bench shape: 2.12 → 1.89 s). On the
-    constant-density area-scaled replica it REGRESSED the 10× time
-    5.7 → 7.6 s (slope 0.30 → 0.51), so the lazy chain stays the
-    default and dense-shape callers opt in.
+    The escalation chain stays lazy (the level-0 accept pass is
+    re-derived once per downstream reference): checkpointing each
+    level's leftovers measured 5.7 → 7.6 s on the 10x area-scaled
+    replica and gained only inside the drift band on the dense
+    fixed-area bench shape (2.12 → 1.89 s).
     """
     p, f, accepted = _bucketed_accept(
         points, facilities, point_id, facility_id,
@@ -641,8 +627,6 @@ def nearest_neighbor_bucketed(
         # each escalation stage schedules a handful of tasks, not a
         # full shuffle-width of near-empty ones
         remaining = remaining.coalesce(8)
-        if pin_leftovers:
-            remaining = remaining.localCheckpoint()
         _, _, acc_k = _bucketed_accept(
             remaining, f, "_pid", "_fid",
             "_plat", "_plon", "_flat", "_flon",

@@ -1419,7 +1419,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_lsh_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The minhash hot-bucket guard, oracle-checked: deterministic
-    # 'sample' cap (2 lowest ids per band bucket — the largest sf0.01
+    # cap (2 lowest ids per band bucket — the largest sf0.01
     # buckets have 3 members, so the cap genuinely truncates) mirrored
     # by QUALIFY in the oracle — exact reduced pair set.
     return dd.minhash_lsh_pairs(
@@ -1427,7 +1427,6 @@ def minhash_lsh_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=16,
         bands=4,
         max_bucket_size=2,
-        cap_strategy="sample",
     )
 
 
@@ -2109,14 +2108,7 @@ def spatial_nearest_hf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(-4.0) + (ck % 999) / 1000.0).alias("lat"),
         (F.lit(39.0) + ((ck * 7) % 999) / 1000.0).alias("lon"),
     )
-    # pin_leftovers: this entry's fixed-area density makes the accept
-    # pass expensive per reference, so plan truncation wins here
-    # (2.12 -> 1.89 s paired); the operator default stays lazy — the
-    # area-scaled constant-density regime measured pinning as a
-    # regression (see nearest_neighbor_bucketed docstring)
-    return sp.nearest_neighbor_bucketed(
-        pts, hf, cell_m=5000.0, lat_ref=-3.5, pin_leftovers=True
-    )
+    return sp.nearest_neighbor_bucketed(pts, hf, cell_m=5000.0, lat_ref=-3.5)
 
 
 @_register(
@@ -3751,11 +3743,11 @@ def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_neardup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The hot-bucket guard itself, oracle-checked: cap each (band,
     # chunk) bucket to its 20 lowest-id members before pairing. The
-    # 'sample' strategy is deterministic (row_number by id), so DuckDB
+    # cap is deterministic (row_number by id), so DuckDB
     # predicts the exact reduced pair set — proving the cap semantics,
     # not just that "fewer pairs come out".
     return dd.simhash_neardup_pairs(
-        _t(spark, sf_dir, "documents"), max_bucket_size=20, cap_strategy="sample"
+        _t(spark, sf_dir, "documents"), max_bucket_size=20
     )
 
 
@@ -12136,7 +12128,7 @@ def ntile_price_quartiles_scalable(spark: SparkSession, sf_dir: str) -> DataFram
 def semantic_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The PRODUCTION SemDeDup regime on duplicate-heavy corpora:
     # per-cluster membership capped (deterministic id-ordered sample,
-    # _cap_buckets strategy='sample') so pair volume is bounded at
+    # _cap_buckets) so pair volume is bounded at
     # k*C(cap,2) while assignment + the cid shuffle stay linear.
     # cap=30 BINDS at gate scale (mean cluster ~62 of 500 vectors), so
     # the hash compare checks the capped path itself, not a no-op.

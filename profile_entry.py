@@ -1,103 +1,93 @@
 #!/usr/bin/env python
-"""Per-job profile of one bench entry (guide §1: measure first).
+"""Per-entry ledger of bench entries (guide §1: measure first).
 
-Runs an entry exactly like bench.py (noop sink, $SPARK_GRAFT_SF_DIR,
-local[$SPARK_GRAFT_CPUS]), once warm + once steady, then dumps every
-Spark job the steady run submitted — duration, description, stage
-shuffle/in-out bytes — from the UI REST API. This is the breakdown the
-UI's Jobs page shows, captured headlessly.
+Runs each named entry exactly like bench.py (the engine session as
+``get_spark`` builds it, UI off; noop sink; $SPARK_GRAFT_SF_DIR;
+local[$SPARK_GRAFT_CPUS]), once warm and once steady, and prints the
+steady run's ledger from ``perfbench.ledger.Tracer``: Spark jobs,
+stages and tasks, job-busy time and the driver gap between jobs, py4j
+calls, Catalyst phase times, and the spans of the traced
+``jobs``/``operators`` functions (``perfbench.ledger.SPANS``).
+
+Catalyst phases are read from the built DataFrame's own
+QueryExecution, planned after the timed run: the noop write plans the
+same tree under a QueryExecution of its own, which Python cannot reach.
 
 Usage: python profile_entry.py <entry> [<entry> ...]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import _noop  # noqa: E402
 from bohemia_kenya_data_pipeline_spark.queries import QUERIES  # noqa: E402
 from bohemia_kenya_data_pipeline_spark.session import get_spark  # noqa: E402
+from perfbench.ledger import Tracer  # noqa: E402
 
 
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _api(base: str, path: str):
-    with urllib.request.urlopen(base + path) as r:
-        return json.loads(r.read().decode())
+def _print_ledger(name: str, warm: float, rec: dict) -> None:
+    print(
+        f"\n=== {name}: warm {warm:.3f}s steady {rec['wall_s']:.3f}s "
+        f"(build {rec['build_s']:.3f}s) ==="
+    )
+    print(
+        f"  jobs={rec['jobs']} stages={int(rec['stages'])} "
+        f"tasks={int(rec['tasks'])} job_busy_s={rec['job_busy_s']:.3f} "
+        f"gap_s={rec['gap_s']:.3f} py4j_calls={rec['py4j_calls']}"
+    )
+    print(
+        f"  catalyst analysis={rec['analysis_ms']:.0f}ms "
+        f"optimization={rec['optimization_ms']:.0f}ms "
+        f"planning={rec['planning_ms']:.0f}ms"
+    )
+    print(
+        f"  exec run_s={rec['run_s']:.3f} cpu_s={rec['cpu_s']:.3f} "
+        f"gc_s={rec['gc_s']:.3f} shuffle_read_mb={rec['shuffle_read_mb']:.1f} "
+        f"shuffle_write_mb={rec['shuffle_write_mb']:.1f} "
+        f"spill_mb={rec['spill_mb']:.1f} input_mb={rec['input_mb']:.1f} "
+        f"output_mb={rec['output_mb']:.1f}"
+    )
+    for span, (calls, wall, jobs) in sorted(rec["spans"].items()):
+        print(f"  span {span}: calls={calls} wall_s={wall:.3f} jobs={jobs}")
+    for problem in rec["problems"]:
+        print(f"  PROBLEM {problem}")
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # the engine session disables the UI (driver overhead); profiling
-    # needs the REST API, so re-enable it for this tool only
-    spark = get_spark(
-        app_name="bkdp-profile", extra_conf={"spark.ui.enabled": "true"}
-    )
+    spark = get_spark(app_name="bkdp-profile")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    api = f"{base}/api/v1/applications/{app_id}"
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracer = Tracer(spark)
 
     for name in sys.argv[1:]:
         fn = QUERIES[name]
-        # warm run (JIT) — not profiled
-        t0 = time.perf_counter()
+        # warm run (JIT) — not traced
+        p0 = time.perf_counter()
         _noop(fn(spark, sf_dir))
-        warm = time.perf_counter() - t0
-        jobs_before = {j["jobId"] for j in _api(api, "/jobs")}
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        t0 = time.perf_counter()
-        _noop(fn(spark, sf_dir))
-        steady = time.perf_counter() - t0
-        spark.sparkContext.setJobDescription(None)
-        jobs = [j for j in _api(api, "/jobs") if j["jobId"] not in jobs_before]
-        jobs.sort(key=lambda j: j["jobId"])
-        print(f"\n=== {name}: warm {warm:.3f}s steady {steady:.3f}s "
-              f"{len(jobs)} jobs ===")
-        tot = 0.0
-        for j in jobs:
-            sub = j.get("submissionTime")
-            comp = j.get("completionTime")
-            dur = "?"
-            if sub and comp:
-                fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                d = (time.mktime(time.strptime(comp[:-3], fmt[:-2]))
-                     + float(comp[20:23]) / 1000
-                     - time.mktime(time.strptime(sub[:-3], fmt[:-2]))
-                     - float(sub[20:23]) / 1000)
-                # strptime loses the ms; recompute directly
-                def ts(s):
-                    return (time.mktime(time.strptime(s[:19], "%Y-%m-%dT%H:%M:%S"))
-                            + float(s[20:23]) / 1000)
-                d = ts(comp) - ts(sub)
-                tot += d
-                dur = f"{d:7.3f}s"
-            desc = (j.get("description") or j.get("name") or "")[:110]
-            stages = []
-            for sid in sorted(j.get("stageIds", [])):
-                try:
-                    sts = _api(api, f"/stages/{sid}")
-                    st = sts[0] if isinstance(sts, list) else sts
-                    stages.append(
-                        f"{st.get('name', '?').split(' at ')[0]}"
-                        f"[{st.get('numCompleteTasks', 0)}t "
-                        f"in={st.get('inputBytes', 0) >> 20}M "
-                        f"sh={st.get('shuffleReadBytes', 0) >> 20}M]"
-                    )
-                except Exception:
-                    stages.append(f"s{sid}?")
-            print(f"  job {j['jobId']:>4} {dur} tasks={j.get('numTasks', 0):>4} "
-                  f"{' | '.join(stages)}")
-        print(f"  sum(job durations) = {tot:.3f}s  (gaps = driver-side work: "
-              f"{steady - tot:.3f}s)")
+        warm = time.perf_counter() - p0
+        bus.waitUntilEmpty()
+        tracer.install()
+        try:
+            group = tracer.begin_entry(name)
+            t0, p0 = time.time(), time.perf_counter()
+            df = fn(spark, sf_dir)
+            p1 = time.perf_counter()
+            _noop(df)
+            t1 = time.time()
+            calls = tracer.calls
+            bus.waitUntilEmpty()
+            df._jdf.queryExecution().executedPlan()
+            rec = tracer.end_entry(group, t0, t1, p1 - p0, calls, [df])
+        finally:
+            tracer.uninstall()
+        _print_ledger(name, warm, rec)
     return 0
 
 

@@ -25,6 +25,7 @@ realistic case) instead of 10x exact clones of every doc.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
 import os
@@ -36,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import _cleaning_dag_e2e  # noqa: E402
+from bench import _cleaning_dag_e2e, _noop  # noqa: E402
 from bohemia_kenya_data_pipeline_spark.operators import similarity as sim  # noqa: E402
 from bohemia_kenya_data_pipeline_spark.queries import QUERIES, _events, _t  # noqa: E402
 from bohemia_kenya_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -460,8 +461,17 @@ def _rm_index(p: str) -> None:
             os.remove(p + side)
 
 
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+@contextlib.contextmanager
+def _ivf_kernel(kernel: str):
+    """Force the IVF C×D kernel decision to one side ("arrow" or
+    "fold") for the A/B entries, by patching the threshold the engine
+    reads at call time."""
+    saved = sim.ARROW_ASSIGN_MIN_CXD
+    sim.ARROW_ASSIGN_MIN_CXD = 0 if kernel == "arrow" else 10**12
+    try:
+        yield
+    finally:
+        sim.ARROW_ASSIGN_MIN_CXD = saved
 
 
 def _time(fn, runs: int = 2) -> float:
@@ -703,12 +713,12 @@ def main() -> None:
                 continue
 
             def mk(d, kr=kernel):
-                rt.build_ann_index(
-                    _t(spark, d, "embeddings"),
-                    os.path.join(SCRATCH, f"annbuild_{kr}"),
-                    centroids=cents_big,
-                    assign=kr,
-                )
+                with _ivf_kernel(kr):
+                    rt.build_ann_index(
+                        _t(spark, d, "embeddings"),
+                        os.path.join(SCRATCH, f"annbuild_{kr}"),
+                        centroids=cents_big,
+                    )
 
             measure(name, big, mk)
             results[name]["note"] = (
@@ -734,14 +744,12 @@ def main() -> None:
             name = f"ivf_train_c{ANN_C}_{kernel}"
             if only and name not in keep:
                 continue
-            trainer = (
-                sim.ivf_train_centroids_arrow
-                if kernel == "arrow"
-                else sim.ivf_train_centroids
-            )
 
-            def mk_t(d, tr=trainer):
-                tr(_t(spark, d, "embeddings"), n_centroids=ANN_C, n_iters=2)
+            def mk_t(d, kr=kernel):
+                with _ivf_kernel(kr):
+                    sim.ivf_train_centroids(
+                        _t(spark, d, "embeddings"), n_centroids=ANN_C, n_iters=2
+                    )
 
             measure(name, big, mk_t)
             results[name]["note"] = (
@@ -771,7 +779,7 @@ def main() -> None:
             p = os.path.join(SCRATCH, f"annretrain_x{fct}")
             shutil.rmtree(p, ignore_errors=True)
             emb_f = _t(spark, dirs[fct], "embeddings")
-            rt.build_ann_index(emb_f, p, centroids=cents_r, assign="arrow")
+            rt.build_ann_index(emb_f, p, centroids=cents_r)
             rt.delete_from_index(
                 emb_f.filter(F.col("vec_id") % 10 == 7), p
             )
@@ -779,7 +787,7 @@ def main() -> None:
 
         def mk_r(d):
             fct = 1 if d == dirs[1] else big
-            rt.retrain_index(spark, rpaths[fct], n_iters=1, kernel="arrow")
+            rt.retrain_index(spark, rpaths[fct], n_iters=1)
 
         measure(retrain_name, big, mk_r)
         results[retrain_name]["note"] = (
@@ -834,12 +842,8 @@ def main() -> None:
                 spark, ps["manifest"], ["l_shipdate", "l_quantity"]
             )
             emb_f = _t(spark, dirs[fct], "embeddings")
-            rt.build_ann_index(
-                emb_f, ps["ann"], centroids=cents_i, assign="arrow"
-            )
-            rt.build_ivfpq_index(
-                emb_f, ps["pq"], centroids=cents_i, assign="arrow"
-            )
+            rt.build_ann_index(emb_f, ps["ann"], centroids=cents_i)
+            rt.build_ivfpq_index(emb_f, ps["pq"], centroids=cents_i)
             dd.minhash_index_write(
                 _t(spark, dirs[fct], "documents"), ps["minhash"]
             )

@@ -64,3 +64,14 @@ def assert_frames_match(spark_df, duck_rel, check_types: bool = False):
     du_rows = [tuple(_norm(row[i]) for i in idx) for row in duck_rel.fetchall()]
     assert len(sp_rows) == len(du_rows), f"row counts differ: {len(sp_rows)} vs {len(du_rows)}"
     assert sorted(sp_rows, key=repr) == sorted(du_rows, key=repr)
+
+
+def force_ivf_kernel(monkeypatch, kernel: str) -> None:
+    """Pin the IVF C×D kernel decision (``similarity._arrow_kernel``)
+    to "arrow" or "fold" for the rest of the test, by patching the
+    threshold the engine reads at call time."""
+    from bohemia_kenya_data_pipeline_spark.operators import similarity as sim
+
+    monkeypatch.setattr(
+        sim, "ARROW_ASSIGN_MIN_CXD", 0 if kernel == "arrow" else 10**12
+    )

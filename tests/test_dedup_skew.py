@@ -56,14 +56,6 @@ def test_minhash_cap_noop_on_normal_corpus(spark):
     assert base == capped
 
 
-def test_minhash_drop_strategy_removes_hot_bucket_entirely(spark):
-    df = _adversarial_df(spark)
-    capped = dedup.minhash_lsh_pairs(df, max_bucket_size=8, cap_strategy="drop")
-    # hot docs pair only through the oversized buckets -> all dropped
-    hot_pairs = capped.filter(F.col("id_a") < 10_000).count()
-    assert hot_pairs == 0
-
-
 def test_simhash_cap_bounds_adversarial_pairs(spark):
     df = _adversarial_df(spark)
     cap = 8
@@ -98,8 +90,6 @@ def test_cap_validation(spark):
     df = _adversarial_df(spark, n_hot=3, n_normal=2)
     with pytest.raises(ValueError, match="max_bucket_size"):
         dedup.minhash_lsh_pairs(df, max_bucket_size=1).count()
-    with pytest.raises(ValueError, match="strategy"):
-        dedup.minhash_lsh_pairs(df, max_bucket_size=4, cap_strategy="bogus").count()
 
 
 def test_minhash_index_probe_matches_batch_pairs(spark, tmp_path):

@@ -55,8 +55,9 @@ ALLOWED = {
         6,
         "dot/norm/_nearest_cid/L2/int-dot folds: the expression-fold "
         "scoring plans deliberately KEPT as oracle baselines (labeled "
-        "in bench.py); production paths are the Arrow twins and "
-        "assign='arrow'",
+        "in bench.py); production paths are the Arrow twins and the "
+        "Arrow IVF kernels that assign_centroids picks above the C×D "
+        "threshold",
     ),
 }
 

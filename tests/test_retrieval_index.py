@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from bohemia_kenya_data_pipeline_spark.jobs import retrieval as rt
 from bohemia_kenya_data_pipeline_spark.operators import similarity as sim
+from tests.conftest import force_ivf_kernel
 
 
 def _toy_corpus(spark, n=400, dim=8):
@@ -83,10 +84,10 @@ def test_extend_ann_index_equals_rebuild(spark, tmp_path):
     assert spark.read.parquet(path).count() == 400
 
 
-def test_arrow_assignment_parity_with_fold(spark, tmp_path):
-    """assign='arrow' (numpy argmax) writes a hash-identical index to
-    assign='fold' (_nearest_cid expression fold) — same rows, same
-    cids, same partition layout — at a C x D where 'auto' picks arrow
+def test_arrow_assignment_parity_with_fold(spark, tmp_path, monkeypatch):
+    """The Arrow kernel (numpy argmax) writes a hash-identical index to
+    the _nearest_cid expression fold — same rows, same cids, same
+    partition layout — at a C x D where the engine picks Arrow
     (VERDICT r7 ask 1)."""
     corpus = _toy_corpus(spark, n=600, dim=16)
     cents = sim.ivf_train_centroids(
@@ -95,8 +96,10 @@ def test_arrow_assignment_parity_with_fold(spark, tmp_path):
     assert len(cents) * len(cents[0]) >= sim.ARROW_ASSIGN_MIN_CXD
     p_fold = str(tmp_path / "fold")
     p_arrow = str(tmp_path / "arrow")
-    rt.build_ann_index(corpus, p_fold, centroids=cents, assign="fold")
-    rt.build_ann_index(corpus, p_arrow, centroids=cents, assign="arrow")
+    force_ivf_kernel(monkeypatch, "fold")
+    rt.build_ann_index(corpus, p_fold, centroids=cents)
+    force_ivf_kernel(monkeypatch, "arrow")
+    rt.build_ann_index(corpus, p_arrow, centroids=cents)
 
     def snap(path):
         rows = spark.read.parquet(path).collect()
@@ -111,29 +114,37 @@ def test_arrow_assignment_parity_with_fold(spark, tmp_path):
     assert dirs(p_fold) == dirs(p_arrow)
 
 
-def test_assign_auto_threshold_and_extend_parity(spark, tmp_path):
-    """auto = fold below ARROW_ASSIGN_MIN_CXD, arrow at/above; extend
-    with the arrow kernel appends the same rows the fold kernel
-    would."""
-    import pytest
+def test_assign_auto_threshold_and_extend_parity(spark, tmp_path, monkeypatch):
+    """The engine picks the fold below ARROW_ASSIGN_MIN_CXD and Arrow
+    at/above it (read at call time); extend with the Arrow kernel
+    appends the same rows the fold kernel would."""
+    from bohemia_kenya_data_pipeline_spark import plans as P
 
     corpus = _toy_corpus(spark, n=200, dim=16)
     small = [[1.0] + [0.0] * 15, [0.0] * 15 + [1.0]]  # 2x16 = 32 < 1024
+    big = [[float(i == j % 16) for j in range(16)] for i in range(64)]  # 1024
+    assert not sim._arrow_kernel(small) and sim._arrow_kernel(big)
+    arrow_nodes = lambda c: P.plan_stats(sim.assign_centroids(corpus, c))[
+        "arrow_python_nodes"
+    ]
+    assert arrow_nodes(small) == 0 and arrow_nodes(big) == 1
+    force_ivf_kernel(monkeypatch, "arrow")
+    assert sim._arrow_kernel(small) and arrow_nodes(small) == 1
+    monkeypatch.undo()
     path = str(tmp_path / "auto_small")
     rt.build_ann_index(corpus, path, centroids=small)  # must not need Arrow
     assert len(rt.load_ann_centroids(spark, path)) == 2
-
-    with pytest.raises(ValueError, match="assign must be"):
-        rt.build_ann_index(corpus, path, centroids=small, assign="nope")
 
     # extend: arrow vs fold parity on the appended delta
     cents = sim.ivf_train_centroids(corpus, n_centroids=64, n_iters=2)
     delta = _toy_corpus(spark, n=700, dim=16).filter(F.col("vec_id") > 600)
     p1, p2 = str(tmp_path / "e_fold"), str(tmp_path / "e_arrow")
-    rt.build_ann_index(corpus, p1, centroids=cents, assign="fold")
-    rt.build_ann_index(corpus, p2, centroids=cents, assign="fold")
-    rt.extend_ann_index(delta, p1, assign="fold")
-    rt.extend_ann_index(delta, p2, assign="arrow")
+    force_ivf_kernel(monkeypatch, "fold")
+    rt.build_ann_index(corpus, p1, centroids=cents)
+    rt.build_ann_index(corpus, p2, centroids=cents)
+    rt.extend_ann_index(delta, p1)
+    force_ivf_kernel(monkeypatch, "arrow")
+    rt.extend_ann_index(delta, p2)
     s1 = sorted((r.vec_id, int(r.cid)) for r in spark.read.parquet(p1).collect())
     s2 = sorted((r.vec_id, int(r.cid)) for r in spark.read.parquet(p2).collect())
     assert s1 == s2 and len(s1) == 300  # 200 corpus + 100 appended
@@ -155,26 +166,24 @@ def test_assign_centroids_arrow_passthrough_and_guards(spark):
         sim.assign_centroids_arrow(df.withColumn("cid", F.lit(1)), cents)
 
 
-def test_build_train_kernel_auto_and_parity(spark, tmp_path):
+def test_build_train_kernel_auto_and_parity(spark, tmp_path, monkeypatch):
     """build_ann_index's implicit training picks the Arrow trainer at
-    production C (auto) and both trainers yield the same index content
-    on the fixture (identical Lloyd fixed point -> identical
-    assignments)."""
-    import pytest
-
+    production C and both trainers yield the same index content on the
+    fixture (identical Lloyd fixed point -> identical assignments)."""
     corpus = _toy_corpus(spark, n=300, dim=16)
     p1, p2 = str(tmp_path / "tf"), str(tmp_path / "ta")
-    c_fold = rt.build_ann_index(corpus, p1, n_centroids=4, n_iters=2, train="fold")
-    c_arrow = rt.build_ann_index(corpus, p2, n_centroids=4, n_iters=2, train="arrow")
+    force_ivf_kernel(monkeypatch, "fold")
+    c_fold = rt.build_ann_index(corpus, p1, n_centroids=4, n_iters=2)
+    force_ivf_kernel(monkeypatch, "arrow")
+    c_arrow = rt.build_ann_index(corpus, p2, n_centroids=4, n_iters=2)
+    monkeypatch.undo()
     assert len(c_fold) == len(c_arrow) == 4
     s1 = sorted((r.vec_id, int(r.cid)) for r in spark.read.parquet(p1).collect())
     s2 = sorted((r.vec_id, int(r.cid)) for r in spark.read.parquet(p2).collect())
     assert s1 == s2 and len(s1) == 300
 
-    with pytest.raises(ValueError, match="train must be"):
-        rt.build_ann_index(corpus, p1, n_centroids=4, train="nope")
-
-    # auto at C=64 trains via Arrow end-to-end and the index queries
+    # the real threshold: C=64 trains via Arrow end-to-end and the
+    # index queries
     p3 = str(tmp_path / "auto64")
     cents = rt.build_ann_index(corpus, p3, n_centroids=64, n_iters=1)
     assert len(cents) == 64
@@ -622,18 +631,18 @@ def test_retrain_index_rejects_pq_layout(spark, tmp_path):
         rt.retrain_index(spark, path)
 
 
-def test_refine_kernels_agree_and_validate(spark):
+def test_refine_kernels_agree_and_validate(spark, monkeypatch):
     import pytest
 
     corpus = _toy_corpus(spark, n=120)
     seed = [[1.0] + [0.0] * 7, [0.0] * 3 + [1.0] + [0.0] * 4]
-    fold = sim.ivf_refine_centroids(corpus, seed, n_iters=2, kernel="fold")
-    arrow = sim.ivf_refine_centroids(corpus, seed, n_iters=2, kernel="arrow")
+    force_ivf_kernel(monkeypatch, "fold")
+    fold = sim.ivf_refine_centroids(corpus, seed, n_iters=2)
+    force_ivf_kernel(monkeypatch, "arrow")
+    arrow = sim.ivf_refine_centroids(corpus, seed, n_iters=2)
     for fc, ac in zip(fold, arrow):
         for f_x, a_x in zip(fc, ac):
             assert abs(f_x - a_x) < 1e-9
-    with pytest.raises(ValueError, match="kernel"):
-        sim.ivf_refine_centroids(corpus, seed, kernel="bogus")
     with pytest.raises(ValueError, match="empty"):
         sim.ivf_refine_centroids(corpus, [])
 

@@ -315,31 +315,50 @@ def test_rrf_empty_rankings_raises_value_error(spark):
         sim.rrf_fuse([])
 
 
-def test_duplicate_spans_window_join_plan_parity(spark):
-    # r14: the one-pass window plan and the two-pass join plan are
-    # alternative physical shapes of the SAME contract — every corpus
-    # shape the island goldens above exercise must return identical
-    # rows from both (incl. hot keys shared by many docs, min_docs>2,
-    # and docs with no duplicated shingles)
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e f g h i j"),      # shares a full run with 2
-            (2, "a b c d e f g h i j"),
-            (3, "x y z a b c d e f g h i j w"),  # partial overlap
-            (4, "unique tokens only here none shared at all ok fine"),
-            (5, "a b c d e f g h i j"),      # 3-way hot shingles
-        ],
-        ["doc_id", "text"],
-    )
+def _brute_force_spans(docs, n, min_docs):
+    """Pure-Python reference for duplicate_spans: whitespace tokens,
+    every n-gram's set of owning docs, the 1-based positions covered
+    by n-grams owned by >= min_docs docs, then maximal runs of
+    consecutive covered positions per doc."""
+    toks = {d: t.split() for d, t in docs}
+    owners = {}
+    for d, t in toks.items():
+        for p in range(len(t) - n + 1):
+            owners.setdefault(tuple(t[p : p + n]), set()).add(d)
+    out = []
+    for d, t in toks.items():
+        covered = set()
+        for p in range(len(t) - n + 1):
+            if len(owners[tuple(t[p : p + n])]) >= min_docs:
+                covered.update(range(p + 1, p + n + 1))
+        start = prev = None
+        for pos in sorted(covered):
+            if prev is not None and pos == prev + 1:
+                prev = pos
+                continue
+            if start is not None:
+                out.append((d, start, prev, prev - start + 1))
+            start = prev = pos
+        if start is not None:
+            out.append((d, start, prev, prev - start + 1))
+    return sorted(out)
+
+
+def test_duplicate_spans_matches_brute_force_maximal_spans(spark):
+    # the span plan against an independent pure-Python maximal-span
+    # computation, over hot keys shared by many docs, min_docs > 2,
+    # partial overlaps and docs with no duplicated shingles
+    rows = [
+        (1, "a b c d e f g h i j"),      # shares a full run with 2
+        (2, "a b c d e f g h i j"),
+        (3, "x y z a b c d e f g h i j w"),  # partial overlap
+        (4, "unique tokens only here none shared at all ok fine"),
+        (5, "a b c d e f g h i j"),      # 3-way hot shingles
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
     for md in (2, 3):
-        w = sorted(
+        got = sorted(
             map(tuple, dd.duplicate_spans(docs, n=4, min_docs=md).collect())
         )
-        j = sorted(
-            map(
-                tuple,
-                dd.duplicate_spans(docs, n=4, min_docs=md, plan="join").collect(),
-            )
-        )
-        assert w == j
-        assert w  # non-degenerate: the corpus above always yields spans
+        assert got == _brute_force_spans(rows, 4, md)
+        assert got  # non-degenerate: the corpus above always yields spans

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bohemia_kenya_data_pipeline_spark.operators import similarity as sim
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, force_ivf_kernel
 
 
 def _emb(spark):
@@ -207,9 +207,9 @@ def test_pq_validation(spark):
 
 
 def test_pq_arrow_and_expr_plans_agree(spark):
-    """The Arrow encode (default) and the pure-Column 'expr' reference
-    must produce identical codes — numpy's sequential small-axis sums
-    and first-min argmin mirror the fold + array_position semantics."""
+    """The Arrow encode and the pure-Column ``pq_code`` reference must
+    produce identical codes — numpy's sequential small-axis sums and
+    first-min argmin mirror the fold + array_position semantics."""
     from pyspark.sql import functions as F
 
     from bohemia_kenya_data_pipeline_spark.operators import similarity as sim
@@ -217,15 +217,12 @@ def test_pq_arrow_and_expr_plans_agree(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(300)
     cb = sim.pq_codebooks(64, 8, 16)
     a = {r.vec_id: list(r.pq_code) for r in sim.pq_encode(emb, cb).collect()}
-    b = {
-        r.vec_id: list(r.pq_code)
-        for r in sim.pq_encode(emb, cb, plan="expr").collect()
-    }
-    assert a == b
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        sim.pq_encode(emb, cb, plan="nope")
+    ref = emb.select(
+        "vec_id",
+        sim.pq_code(F.col("embedding").cast("array<double>"), cb).alias("pq_code"),
+    )
+    b = {r.vec_id: list(r.pq_code) for r in ref.collect()}
+    assert a == b and len(a) == 300
 
 
 def test_ivf_train_small_corpus_degrades_gracefully(spark):
@@ -582,7 +579,7 @@ def test_mine_hard_negatives_shortfall_flag(spark):
     assert [r.shortfall for r in ok.collect()] == [False, False]
 
 
-def test_ivf_train_arrow_matches_fold_training(spark):
+def test_ivf_train_arrow_matches_fold_training(spark, monkeypatch):
     """The Arrow training kernel reaches the same Lloyd fixed point as
     the fold kernel: centroids agree to 1e-9 per component on the
     fixture and downstream assignment is identical (r8 — the training
@@ -590,8 +587,10 @@ def test_ivf_train_arrow_matches_fold_training(spark):
     import numpy as np
 
     corpus = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    force_ivf_kernel(monkeypatch, "fold")
     fold = sim.ivf_train_centroids(corpus, n_centroids=8, n_iters=3)
-    arrow = sim.ivf_train_centroids_arrow(corpus, n_centroids=8, n_iters=3)
+    force_ivf_kernel(monkeypatch, "arrow")
+    arrow = sim.ivf_train_centroids(corpus, n_centroids=8, n_iters=3)
     assert np.allclose(np.asarray(fold), np.asarray(arrow), atol=1e-9)
     # identical downstream assignments (the thing that matters)
     a1 = sim.assign_centroids_arrow(corpus, fold).select("vec_id", "cid")
@@ -599,24 +598,25 @@ def test_ivf_train_arrow_matches_fold_training(spark):
     assert sorted(map(tuple, a1.collect())) == sorted(map(tuple, a2.collect()))
 
 
-def test_ivf_train_arrow_guards_and_sampling(spark):
+def test_ivf_train_arrow_guards_and_sampling(spark, monkeypatch):
     import pytest
 
     corpus = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    force_ivf_kernel(monkeypatch, "arrow")
     with pytest.raises(ValueError, match="train_fraction"):
-        sim.ivf_train_centroids_arrow(corpus, train_fraction=1.5)
+        sim.ivf_train_centroids(corpus, train_fraction=1.5)
     with pytest.raises(ValueError, match="raise train_fraction"):
-        sim.ivf_train_centroids_arrow(
+        sim.ivf_train_centroids(
             corpus, n_centroids=64, n_iters=1, train_fraction=0.01
         )
     # sampled training still seeds deterministically and returns k
-    cents = sim.ivf_train_centroids_arrow(
+    cents = sim.ivf_train_centroids(
         corpus, n_centroids=4, n_iters=2, train_fraction=0.5
     )
     assert len(cents) == 4 and len(cents[0]) == 64
     # tiny full corpus degrades to corpus size, same as the fold path
     tiny = corpus.limit(3)
-    assert len(sim.ivf_train_centroids_arrow(tiny, n_centroids=8, n_iters=1)) == 3
+    assert len(sim.ivf_train_centroids(tiny, n_centroids=8, n_iters=1)) == 3
 
 
 def test_validate_embeddings_classifies_and_quarantines(spark):

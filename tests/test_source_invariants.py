@@ -18,6 +18,11 @@ ran by hand, codified so they can't regress silently.
    parquet the engine itself wrote, so they go through
    ``session.parquet_scan`` (schema from a local footer); only the
    reads of EXTERNAL input listed below may infer.
+4. No implementation-selector parameters on public operator/job
+   functions: the engine picks its own kernels from what it observes
+   (e.g. the IVF C×D rule), so a ``plan=``/``kernel=``/``assign=``
+   style knob may not creep back. The allow-list names the two kept
+   on purpose, each with its reason.
 """
 
 from __future__ import annotations
@@ -150,3 +155,78 @@ def test_lifecycle_modules_read_engine_parquet_without_inference():
     )
     # the allow-list names live external-input reads, not stale ones
     assert INFERRING_READ_ALLOWED <= found
+
+
+#: parameter names that choose between implementations of one contract
+SELECTOR_PARAMS = frozenset(
+    {
+        "plan",
+        "strategy",
+        "cap_strategy",
+        "kernel",
+        "assign",
+        "train",
+        "pin_leftovers",
+        "cache_inputs",
+        "probe_partitions",
+        "persist_each",
+    }
+)
+
+#: (module, function, parameter) -> why this selector stays public
+SELECTOR_ALLOWED = {
+    ("operators/dedup.py", "minhash_signatures", "plan"): (
+        "production uses both values: _minhash_band_rows needs 'agg' so "
+        "its exchange is reused across the band self-join"
+    ),
+    ("operators/graph.py", "pagerank", "persist_each"): (
+        "lineage truncation for deep iteration counts (SCALING.md); "
+        "deriving it from n_iter is a separate design question"
+    ),
+}
+
+
+def _selector_params(src: str) -> set[tuple[str, str]]:
+    """(function, parameter) for every module-level public function
+    taking a parameter named in SELECTOR_PARAMS."""
+    hits = set()
+    for fn in ast.parse(src).body:
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        if fn.name.startswith("_"):
+            continue
+        a = fn.args
+        for arg in a.posonlyargs + a.args + a.kwonlyargs:
+            if arg.arg in SELECTOR_PARAMS:
+                hits.add((fn.name, arg.arg))
+    return hits
+
+
+def test_selector_param_detector_can_fail():
+    src = (
+        "def f(df, plan='x'):\n"
+        "    return df\n"
+        "def g(df, *, kernel='auto'):\n"
+        "    return df\n"
+        "def _private(df, plan='x'):\n"
+        "    return df\n"
+        "def h(df, n=1):\n"
+        "    def plan(kernel):\n"
+        "        return kernel\n"
+        "    return df\n"
+    )
+    assert _selector_params(src) == {("f", "plan"), ("g", "kernel")}
+
+
+def test_no_implementation_selector_params():
+    found = {
+        (str(p.relative_to(PKG).as_posix()), fn, arg)
+        for p in sorted(PKG.glob("operators/*.py")) + sorted(PKG.glob("jobs/*.py"))
+        for fn, arg in _selector_params(p.read_text())
+    }
+    assert found - set(SELECTOR_ALLOWED) == set(), (
+        "implementation-selector parameter on a public function: let the "
+        "engine pick the kernel, or justify it in SELECTOR_ALLOWED"
+    )
+    # the allow-list names live parameters, not stale ones
+    assert set(SELECTOR_ALLOWED) <= found

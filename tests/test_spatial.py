@@ -103,37 +103,6 @@ def test_bucketed_fallback_path_still_exact(spark):
     assert base == buck
 
 
-def test_bucketed_pinned_leftovers_match_lazy_plan(spark):
-    # r15: pin_leftovers materializes each escalation level's leftover
-    # set (localCheckpoint) so level k's plan stops re-deriving levels
-    # 0..k-1. Values must be identical to the fully-lazy plan — a
-    # checkpoint is a materialization barrier, not a transformation.
-    # 500 m cells force real escalation + fallback traffic.
-    pts, hf = _nn_points_facilities(spark)
-    lazy = {
-        (r.id, r.hf_id, r.dist_m)
-        for r in sp.nearest_neighbor_bucketed(
-            pts, hf, cell_m=500.0, lat_ref=-3.5, pin_leftovers=False
-        ).collect()
-    }
-    pinned = sp.nearest_neighbor_bucketed(
-        pts, hf, cell_m=500.0, lat_ref=-3.5, pin_leftovers=True
-    )
-    assert {(r.id, r.hf_id, r.dist_m) for r in pinned.collect()} == lazy
-    # truncation evidence: the pinned plan reads the checkpointed
-    # leftover RDDs (ExistingRDD scans) and is structurally smaller
-    # than the lazy plan, whose unions re-derive every level's chain
-    lazy_plan = sp.nearest_neighbor_bucketed(
-        pts, hf, cell_m=500.0, lat_ref=-3.5, pin_leftovers=False
-    )._jdf.queryExecution().optimizedPlan().toString()
-    pinned_plan = pinned._jdf.queryExecution().optimizedPlan().toString()
-    # the lazy plan re-derives the point/facility inputs once per
-    # level reference (dozens of leaf scans); pinning cuts each level
-    # to a checkpoint read, so the leaf count and plan size collapse
-    assert pinned_plan.count("LogicalRDD") < lazy_plan.count("LogicalRDD")
-    assert len(pinned_plan) < len(lazy_plan) / 2
-
-
 def test_bucketed_no_facility_broadcast_in_plan(spark):
     # the point of the bucketed variant: the facility side must not be
     # broadcast — candidates come from the grid equi-join (shuffle),
